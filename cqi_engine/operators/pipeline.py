@@ -23,8 +23,6 @@ the exact code path proven bit-for-bit against the reference golden corpus.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -564,8 +562,7 @@ def score_batches(ways_with_sidepath: DataFrame,
     # dominated by per-CALL fixed overhead, not rows — buffer incoming Arrow
     # batches to this many rows per kernel invocation (memory: ~tens of MB
     # of Arrow buffers per worker, bounded)
-    target_rows = int(os.environ.get("SPARK_GRAFT_SCORE_BATCH_ROWS",
-                                     "131072"))
+    target_rows = 131072
 
     def process(tbl: pa.Table):
         n = tbl.num_rows
@@ -634,125 +631,6 @@ def score_batches(ways_with_sidepath: DataFrame,
             yield from process(pa.Table.from_batches(buf))
 
     return ways_with_sidepath.mapInArrow(run, OUTPUT_SCHEMA)
-
-
-# distinguishes NULL from empty/absent in the signature hash: Spark's
-# xxhash64 skips null inputs entirely (so (null,"x") and ("x",null) would
-# otherwise collide by construction); coalescing every column to a sentinel
-# makes each column position contribute.  A data value equal to the sentinel
-# only risks a collision, and collisions are detected exactly (below).
-_SIG_NULL_SENTINEL = "\x00\x00cqi:null"
-
-
-def _signature_col(key_cols: list[str]):
-    return F.xxhash64(*[F.coalesce(F.col(c).cast("string"),
-                                   F.lit(_SIG_NULL_SENTINEL))
-                        for c in key_cols])
-
-
-# sidepath-aggregation columns that (with the tag tuple) fully determine the
-# scoring kernel's input row — way_id only through its null-ness (the
-# writeback tests `way_id IS NULL`), ms_map through a canonical sorted-entry
-# rendering (collect_list order is nondeterministic; the MAP value is not)
-_AGG_SCALARS = ("checks", "id_sum", "hw_sum", "name_sum",
-                "argmax_hw", "mode_name")
-
-
-def score_distinct_join(slim: DataFrame, agg: DataFrame,
-                        offset_distance=None,
-                        min_dup: float = 4.0,
-                        broadcast_tags_below: int = 2_000_000) -> DataFrame:
-    """Scoring via JVM-side tuple dedup + narrow signature joins.
-
-    The kernel is a pure function of (tag tuple, sidepath aggregates), so
-    instead of shipping every row's ~85 string columns through joins and
-    the Arrow/Python boundary, the wide columns stop at the persisted
-    ``ways`` table: distinct tag tuples are found JVM-side
-    (``dropDuplicates`` = hash aggregate with map-side combine — on a
-    duplicate-heavy web corpus the shuffle carries ~k rows, not n), every
-    downstream relation carries only a 64-bit tag signature, and the k
-    distinct (tag, aggregates) combinations are scored once in Python,
-    fanning back out through a narrow equi-join on the combined signature.
-
-    Exactness: the hashes are trusted only after verifying they are
-    collision-free ON THE DISTINCT SETS (count(distinct tuples) ==
-    count(distinct sigs) — any two distinct tuples colliding anywhere in
-    the corpus would collide there too); a collision, or a corpus with
-    <``min_dup``× duplication where this plan wouldn't pay, falls back to
-    the direct Arrow-grouped path.  No unbounded broadcast: the tag
-    dictionary is broadcast only while its measured distinct count is
-    under ``broadcast_tags_below``, else it joins shuffle-hash; the
-    scattering join is hinted ``shuffle_hash`` (UDF output is unsizable
-    to Catalyst).
-
-    MEASURED NEGATIVE at the surrogate scale — kept as an operator, not
-    the default.  At sf0.1×100 on this single box the plan is row-identical
-    but slower than the Arrow-grouped default (local[1]: 50.8 s vs 47.5 s;
-    local[4]: 27.0 s vs 18.6 s): its five extra driver actions
-    (distinct/collision counts, narrow persist) and the Janino compile of
-    the wide signature+writeback codegen are SERIAL costs that dwarf the
-    ~9 s of Arrow transfer it removes, and they do not shrink with added
-    cores.  The crossover needs the per-partition Python boundary cost to
-    dominate those fixed costs — i.e. orders of magnitude more rows per
-    driver action than the surrogate runs (true for a 1000-executor
-    corpus, false here).  ``score_way_table`` therefore defaults to
-    ``score_batches``; this plan stays available, identity-tested
-    (tests/test_grouped_eval.py), for the regime it was built for.
-    """
-    tag_cols = [c for c in slim.columns
-                if c not in ("id", "__iid", "__tsig")]
-    key = "__iid" if "__iid" in slim.columns else "id"
-    ws = slim if "__tsig" in slim.columns \
-        else slim.withColumn("__tsig", _signature_col(tag_cols))
-    tag_rep = ws.drop("id", "__iid").dropDuplicates().persist()
-    n_tags = tag_rep.count()
-    n_tsigs = tag_rep.select("__tsig").distinct().count()
-    n_rows = slim.count()
-    if n_tags != n_tsigs or n_tags * min_dup > n_rows:
-        tag_rep.unpersist()
-        return score_batches(
-            apply_sidepath_spark(slim.drop("__tsig"), agg),
-            offset_distance=offset_distance)
-
-    # narrow per-way relation; persisted so every consumer sees ONE
-    # evaluation of the (collect_list-order-nondeterministic) aggregates
-    narrow = (ws.select("id", *([key] if key != "id" else []), "__tsig")
-              .join(agg, F.col(key) == F.col("way_id"), "left")
-              .drop(*([key] if key != "id" else []))
-              .withColumn("__has_agg", F.col("way_id").isNotNull())
-              .withColumn("__ms_key", F.expr(
-                  "cast(array_sort(map_entries(ms_map)) as string)"))
-              .drop("way_id"))
-    sig_key_cols = ["__tsig", "__has_agg", *_AGG_SCALARS, "__ms_key"]
-    narrow = narrow.withColumn(
-        "__sig", _signature_col(sig_key_cols)).persist()
-
-    rep = narrow.drop("id").dropDuplicates(sig_key_cols).persist()
-    n_reps = rep.count()
-    n_sigs = rep.select("__sig").distinct().count()
-    if n_reps != n_sigs:
-        tag_rep.unpersist()
-        rep.unpersist()
-        narrow.unpersist()
-        return score_batches(apply_sidepath_spark(slim, agg),
-                             offset_distance=offset_distance)
-
-    tag_side = F.broadcast(tag_rep) if n_tags < broadcast_tags_below \
-        else tag_rep.hint("shuffle_hash")
-    rep_full = rep.join(tag_side, "__tsig") \
-        .withColumn("way_id", F.when(F.col("__has_agg"),
-                                     F.lit("\x00agg")).cast("string")) \
-        .withColumn("id", F.col("__sig").cast("string"))
-    enr_rep = _sidepath_writeback(rep_full) \
-        .drop("__tsig", "__has_agg", "__ms_key", "__sig")
-    scored_rep = score_batches(enr_rep, offset_distance=offset_distance)
-    scored_keyed = scored_rep.withColumn(
-        "__sig", F.col("id").cast("long")).drop("id")
-    mapping = narrow.select(F.col("id").alias("__way_id"), "__sig")
-    out_cols = [F.col("__way_id").alias("id")] + \
-        [F.col(c) for c in C.OUTPUT_COLUMNS if c != "id"]
-    return mapping.join(scored_keyed.hint("shuffle_hash"), "__sig") \
-                  .select(*out_cols)
 
 
 def score_pages(pages: DataFrame,

@@ -81,7 +81,6 @@ def run_query(spark, sf_dir: str, q: Query):
     from ..session import ship_package, tune_runtime
     ship_package(spark)
     tune_runtime(spark)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     for t in q.tables:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
     if q.fn is not None:

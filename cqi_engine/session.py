@@ -7,38 +7,44 @@ import os
 from pyspark.sql import SparkSession
 
 
+# Runtime confs the engine relies on, listed once: build_session passes them
+# to the builder and tune_runtime sets them on a session handed in from
+# outside (200 shuffle partitions, no AQE tuning).  Every key is settable on
+# a live session.
+RUNTIME_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.shuffle.partitions": "32",
+    # the sidepath cell join is skew-prone (dense urban cells)
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # UDF-heavy stages cost ~ms/row, not ~ns/byte: the 64 MB default
+    # advisory size coalesces into few fat partitions whose Python
+    # kernels become stragglers.  8 MB keeps post-shuffle parallelism
+    # at small-batch row counts without exploding task counts.
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+}
+
+
 def build_session(app_name: str = "cqi-engine", master: str | None = None,
                   shuffle_partitions: int | None = None) -> SparkSession:
     """local[...] session tuned for the engine.
 
     Scale posture: Arrow-batched UDF transfer, AQE with skew-join handling
-    (the sidepath cell join is skew-prone: dense urban cells), and
-    partition-count defaults sized for the local harness.  On a real cluster
-    the same builder is used via spark-submit with cluster-master settings.
+    and partition-count defaults sized for the local harness (RUNTIME_CONF).
+    On a real cluster the same builder is used via spark-submit with
+    cluster-master settings.
     """
     master = master or os.environ.get("SPARK_GRAFT_MASTER",
                                       f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+    conf = dict(RUNTIME_CONF)
+    if shuffle_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # UDF-heavy stages cost ~ms/row, not ~ns/byte: the 64 MB default
-        # advisory size coalesces into few fat partitions whose Python
-        # kernels become stragglers.  8 MB keeps post-shuffle parallelism
-        # at small-batch row counts without exploding task counts.
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # smaller Arrow batches cap the bytes in flight per Python worker
-        # (32 workers x batch x double-buffer is the peak Arrow footprint);
-        # env knob so the scaling protocol can sweep it
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("SPARK_GRAFT_ARROW_BATCH", "10000"))
+        .config(map=conf)
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # zstd halves the flagship's shuffle volume vs the lz4 default
@@ -46,14 +52,12 @@ def build_session(app_name: str = "cqi-engine", master: str | None = None,
         # at 12.4 s, executor CPU +5%) — on a real cluster shuffle bytes
         # cross the network, so the byte diet is the scale win.  Startup-
         # static conf: only effective on sessions this builder creates.
-        .config("spark.io.compression.codec",
-                os.environ.get("SPARK_GRAFT_CODEC", "zstd"))
-        # UI off by default (test noise); the work-invariance protocol
-        # enables it to scrape per-stage byte metrics from /api/v1
+        .config("spark.io.compression.codec", "zstd")
+        # UI off by default (test noise); the traced benchmark run enables
+        # it to read per-stage metrics from /api/v1
         .config("spark.ui.enabled",
                 os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.ui.port", "0")
-        .config("spark.sql.session.timeZone", "UTC")
     )
     return builder.getOrCreate()
 
@@ -95,25 +99,7 @@ def ship_package(spark: SparkSession) -> None:
 
 
 def tune_runtime(spark: SparkSession) -> None:
-    """Engine defaults that are runtime-settable on any session.
-
-    The harness may hand us a vanilla session (200 shuffle partitions, no
-    AQE tuning) — these settings are the same ones build_session bakes in,
-    applied to whatever session executes the engine's queries.
-    """
-    for k, v in (
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m"),
-        # same default AND same env knob as build_session — plan/bench
-        # evidence must reproduce identically on both session paths
-        ("spark.sql.shuffle.partitions",
-         str(int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32")))),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-    ):
-        try:
-            spark.conf.set(k, v)
-        except Exception:  # static conf on this session -> keep its value
-            pass
+    """Apply RUNTIME_CONF to whatever session executes the engine's queries,
+    so plans match on both session paths."""
+    for k, v in RUNTIME_CONF.items():
+        spark.conf.set(k, v)

@@ -83,7 +83,7 @@ from ..ops.bucketing import write_bucketed
 _MIXM = (1 << 31) - 1
 # bucket count for NEW persisted indexes.  Caps the no-exchange band and
 # verify joins' task count (buckets cannot be split), so it tracks the
-# deployment's core count — env knob for the scaling protocol; at 100 TB
+# deployment's core count, hence a deployment env knob; at 100 TB
 # this is hundreds-to-thousands.  Set ONCE at index creation and pinned
 # in the index's BUCKETS sidecar: existing files are hashed into their
 # recorded bucket count, so later sessions must keep reading/writing that

@@ -80,74 +80,3 @@ def test_signature_codes_group_identical_tuples():
     assert codes[3] == codes[4]          # None and nan are one null
     assert codes[2] != codes[0] and codes[3] != codes[0]
     assert list(first) == [0, 2, 3]
-
-
-def _spark_multiset(df):
-    cols = sorted(df.columns)
-    rows = sorted((tuple(_norm(r[c]) for c in cols)
-                   for r in df.collect()), key=repr)
-    return cols, rows
-
-
-def test_score_distinct_join_matches_direct(spark):
-    """The JVM-dedup + signature-join scoring plan (kept for the regime
-    where the Python boundary dominates; measured slower here — see its
-    docstring) must be row-identical to the default Arrow-grouped path."""
-    from pyspark.sql import functions as F
-
-    from cqi_engine.operators.pipeline import (apply_sidepath_spark,
-                                               sample_points,
-                                               road_cell_index,
-                                               dwithin_pairs,
-                                               sidepath_aggregates,
-                                               score_batches,
-                                               score_distinct_join)
-    from cqi_engine.sources.webways import ways_from_documents
-    from cqi_engine import config as C
-
-    docs = spark.range(2000).select(F.col("id").alias("doc_id"))
-    ways = ways_from_documents(docs).persist()
-    paths = ways.filter(F.col("highway").isin(C.PATH_HIGHWAYS))
-    roads = ways.filter(~F.col("highway").isin(C.ROAD_EXCLUDED_HIGHWAYS)
-                        | F.col("highway").isNull())
-    points = sample_points(paths).persist()
-    pairs = dwithin_pairs(points, road_cell_index(roads), None).persist()
-    agg = sidepath_aggregates(points, pairs)
-    slim = ways.drop("geom_lonlat", "url")
-
-    direct = score_batches(apply_sidepath_spark(slim, agg))
-    via_join = score_distinct_join(slim, agg)
-    assert _spark_multiset(direct) == _spark_multiset(via_join)
-    for df in (ways, points, pairs):
-        df.unpersist()
-
-
-def test_score_distinct_join_low_dup_fallback(spark):
-    """Below min_dup the plan must fall back (plan contains the Arrow-
-    grouped stage over the full relation, not the signature join)."""
-    from pyspark.sql import functions as F
-
-    from cqi_engine.operators.pipeline import (sample_points,
-                                               road_cell_index,
-                                               dwithin_pairs,
-                                               sidepath_aggregates,
-                                               score_distinct_join)
-    from cqi_engine.sources.webways import ways_from_documents
-    from cqi_engine import config as C
-
-    docs = spark.range(150).select(F.col("id").alias("doc_id"))
-    ways = ways_from_documents(docs).persist()
-    paths = ways.filter(F.col("highway").isin(C.PATH_HIGHWAYS))
-    roads = ways.filter(~F.col("highway").isin(C.ROAD_EXCLUDED_HIGHWAYS)
-                        | F.col("highway").isNull())
-    points = sample_points(paths).persist()
-    pairs = dwithin_pairs(points, road_cell_index(roads), None).persist()
-    agg = sidepath_aggregates(points, pairs)
-    slim = ways.drop("geom_lonlat", "url")
-    # ~140 distinct tuples over 150 rows: duplication < 4x -> fallback
-    out = score_distinct_join(slim, agg)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "__sig" not in plan
-    assert out.count() > 0
-    for df in (ways, points, pairs):
-        df.unpersist()

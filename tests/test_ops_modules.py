@@ -1318,11 +1318,11 @@ def test_ship_package_keyed_by_application_id():
         sess_mod._SHIPPED_SESSIONS.discard("app-test-ship-B")
 
 
-def test_tune_runtime_matches_build_session_shuffle(monkeypatch):
-    """tune_runtime must set the SAME shuffle-partition default and honor
-    the SAME env knob as build_session — plan/bench evidence has to
-    reproduce identically whichever session path built the session."""
-    from cqi_engine.session import tune_runtime
+def test_tune_runtime_matches_build_session_shuffle():
+    """tune_runtime must set exactly the conf table build_session bakes in,
+    shuffle partitions included, so plans reproduce identically whichever
+    path built the session."""
+    from cqi_engine.session import RUNTIME_CONF, tune_runtime
 
     class _Conf:
         def __init__(self):
@@ -1335,15 +1335,10 @@ def test_tune_runtime_matches_build_session_shuffle(monkeypatch):
         def __init__(self):
             self.conf = _Conf()
 
-    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE", raising=False)
     s = _Spark()
     tune_runtime(s)
+    assert s.conf.vals == RUNTIME_CONF
     assert s.conf.vals["spark.sql.shuffle.partitions"] == "32"
-
-    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "128")
-    s2 = _Spark()
-    tune_runtime(s2)
-    assert s2.conf.vals["spark.sql.shuffle.partitions"] == "128"
 
 
 def test_score_job_snapshot_id_tracks_input_and_buckets(tmp_path):

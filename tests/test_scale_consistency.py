@@ -1,6 +1,6 @@
 """SURVEY §5.5: the same job at two parallelism levels must produce
-identical output (order-insensitive) — the determinism half of the
-two-cluster-size criterion (throughput half lives in scripts/scaling_bench).
+identical output (order-insensitive) — the two-cluster-size determinism
+criterion.
 
 Each run executes in its own subprocess: inside one JVM,
 ``getOrCreate`` would silently reuse the first session's master.
