@@ -42,6 +42,27 @@ MINHASH_JACCARD_NUM = 9
 MINHASH_JACCARD_DEN = 10
 MINHASH_JACCARD = MINHASH_JACCARD_NUM / MINHASH_JACCARD_DEN  # 0.9
 
+
+def spark_quote(text: str, ident: bool = False) -> str:
+    """Spark SQL string literal (or, with ``ident``, backquoted identifier)
+    for arbitrary text.  Identifiers double their backticks.  Literals
+    escape ``\\`` and ``'`` with a backslash (Spark drops an unknown
+    escape's backslash, so ``'c:\\x'`` would read as ``c:x``, and a
+    doubled ``''`` would concatenate two literals) and write control
+    characters as ``\\uXXXX``."""
+    if ident:
+        return "`" + text.replace("`", "``") + "`"
+    out = []
+    for ch in text:
+        if ch in "\\'":
+            out.append("\\" + ch)
+        elif ch < " ":
+            out.append(f"\\u{ord(ch):04x}")
+        else:
+            out.append(ch)
+    return "'" + "".join(out) + "'"
+
+
 def arr_lit(vals, dialect: str) -> str:
     if dialect == SPARK:
         return "array(" + ",".join(f"{v}L" for v in vals) + ")"

@@ -36,6 +36,7 @@ from ..kernel import rules
 from ..kernel.offsets import run_offset_stage
 from ..kernel.sidepath import determine_maxspeed_value
 from . import cells
+from .dialect import spark_quote as Q
 
 WAY_TAG_COLUMNS = list(C.TAG_WHITELIST)
 
@@ -448,55 +449,57 @@ def apply_sidepath_spark(ways: DataFrame, agg: DataFrame) -> DataFrame:
     return _sidepath_writeback(joined)
 
 
+_AGG_COLUMNS = ("way_id", "checks", "id_sum", "hw_sum", "name_sum",
+                "argmax_hw", "mode_name", "ms_map")
+
+
 def _sidepath_writeback(joined: DataFrame) -> DataFrame:
-    """proc_* writeback expressions over an already-joined ways⋈agg row."""
-    is_path = F.col("highway").isin(C.PATH_HIGHWAYS)
-    threshold = F.lit(2.0) / F.lit(3.0) * F.col("checks")
-    majority = (
-        (F.coalesce(F.col("id_sum"), F.lit(0)) >= threshold)
-        | (F.coalesce(F.col("hw_sum"), F.lit(0)) >= threshold)
-        | (F.coalesce(F.col("name_sum"), F.lit(0)) >= threshold))
-    tag = F.col("is_sidepath")
-    tag_falsy = tag.isNull() | (tag == "")
-    proc_sidepath = F.when(~is_path, F.lit(None).cast("string")).when(
-        F.col("way_id").isNull(), F.lit(None).cast("string")).otherwise(
-        F.when(F.col("footway") == "sidewalk", F.lit("yes"))
-        .when(~tag_falsy, tag)
-        .when(majority, F.lit("yes")).otherwise(F.lit("no")))
+    """proc_* writeback expressions over an already-joined ways⋈agg row,
+    as one projection: ``name`` is replaced in place, the ``proc_*``
+    columns are appended and the aggregate columns dropped.  Double
+    literals carry a ``D``: Spark SQL reads a bare ``2.0`` as DECIMAL."""
+    def col(c: str) -> str:
+        return Q(c, ident=True)
 
-    spo = F.col("is_sidepath:of")
-    spo_falsy = spo.isNull() | (spo == "")
-    proc_highway_path = F.when(proc_sidepath == "yes",
-                               F.when(~spo_falsy, spo)
-                               .otherwise(F.col("argmax_hw")))
-    proc_highway = F.when(is_path, proc_highway_path) \
-        .otherwise(F.col("highway"))
-
-    ms_lookup = F.element_at(
-        F.col("ms_map"), F.coalesce(proc_highway, F.lit("\x00null")))
+    is_path = (f"({col('highway')} IN ("
+               + ", ".join(Q(h) for h in C.PATH_HIGHWAYS) + "))")
+    threshold = f"2.0D / 3.0D * {col('checks')}"
+    majority = " OR ".join(f"(coalesce({col(c)}, 0) >= {threshold})"
+                           for c in ("id_sum", "hw_sum", "name_sum"))
+    tag, spo, ms = col("is_sidepath"), col("is_sidepath:of"), col("maxspeed")
+    proc_sidepath = (
+        f"(CASE WHEN NOT {is_path} THEN CAST(NULL AS STRING)"
+        f" WHEN {col('way_id')} IS NULL THEN CAST(NULL AS STRING)"
+        f" ELSE (CASE WHEN {col('footway')} = {Q('sidewalk')} THEN {Q('yes')}"
+        f" WHEN NOT ({tag} IS NULL OR {tag} = {Q('')}) THEN {tag}"
+        f" WHEN ({majority}) THEN {Q('yes')} ELSE {Q('no')} END) END)")
+    sidepath_yes = f"({proc_sidepath} = {Q('yes')})"
+    proc_highway = (
+        f"(CASE WHEN {is_path} THEN (CASE WHEN {sidepath_yes} THEN"
+        f" (CASE WHEN NOT ({spo} IS NULL OR {spo} = {Q('')}) THEN {spo}"
+        f" ELSE {col('argmax_hw')} END) END)"
+        f" ELSE {col('highway')} END)")
+    ms_lookup = (f"element_at({col('ms_map')},"
+                 f" coalesce({proc_highway}, {Q(_NULLK)}))")
     determine_ms = (
-        F.when((F.col("maxspeed") == "walk")
-               | (((F.col("maxspeed").isNull()) | (F.col("maxspeed") == ""))
-                  & (F.col("highway") == "living_street")), F.lit(10.0))
-        .when(F.col("maxspeed") == "none", F.lit(299.0))
-        .otherwise(F.col("maxspeed").try_cast("double")))
-    proc_maxspeed = F.when(is_path,
-                           F.when((proc_sidepath == "yes")
-                                  & ms_lookup.isNotNull()
-                                  & (ms_lookup != 0), ms_lookup)) \
-        .otherwise(determine_ms)
+        f"(CASE WHEN ({ms} = {Q('walk')}) OR ((({ms} IS NULL) OR"
+        f" ({ms} = {Q('')})) AND ({col('highway')} = {Q('living_street')}))"
+        f" THEN 10.0D WHEN {ms} = {Q('none')} THEN 299.0D"
+        f" ELSE try_cast({ms} AS DOUBLE) END)")
+    proc_maxspeed = (
+        f"(CASE WHEN {is_path} THEN (CASE WHEN {sidepath_yes}"
+        f" AND ({ms_lookup} IS NOT NULL) AND ({ms_lookup} != 0)"
+        f" THEN {ms_lookup} END) ELSE {determine_ms} END)")
+    mode = col("mode_name")
+    name = (f"(CASE WHEN {is_path} AND {sidepath_yes} AND ({mode} IS NOT NULL)"
+            f" AND ({mode} != {Q('')}) THEN {mode} ELSE {col('name')} END)")
 
-    name = F.when(is_path & (proc_sidepath == "yes")
-                  & F.col("mode_name").isNotNull()
-                  & (F.col("mode_name") != ""), F.col("mode_name")) \
-        .otherwise(F.col("name"))
-
-    return joined.withColumn("proc_sidepath", proc_sidepath) \
-        .withColumn("proc_highway", proc_highway) \
-        .withColumn("proc_maxspeed", proc_maxspeed) \
-        .withColumn("name", name) \
-        .drop("way_id", "checks", "id_sum", "hw_sum", "name_sum",
-              "argmax_hw", "mode_name", "ms_map")
+    kept = [f"{name} AS {col(c)}" if c == "name" else col(c)
+            for c in joined.columns if c not in _AGG_COLUMNS]
+    return joined.selectExpr(
+        *kept, f"{proc_sidepath} AS proc_sidepath",
+        f"{proc_highway} AS proc_highway",
+        f"{proc_maxspeed} AS proc_maxspeed")
 
 
 def _output_spark_schema() -> T.StructType:

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.dialect import spark_quote as Q
+
 _FEATURE_SCHEMA = T.StructType([
     T.StructField("type", T.StringType()),
     T.StructField("properties", T.MapType(T.StringType(), T.StringType())),
@@ -36,9 +38,8 @@ def read_geojsonl(spark: SparkSession, path: str,
     Properties land in a MapType and are projected to typed columns, so
     adding a tag later is a column-pruned map lookup, not a schema change.
     """
-    raw = spark.read.text(path)
-    feats = raw.select(
-        F.from_json(F.col("value"), _FEATURE_SCHEMA).alias("f"))
+    feats = spark.read.text(path).selectExpr(
+        f"from_json(value, {Q(_FEATURE_SCHEMA.simpleString())}) AS f")
     # from_json is permissive (malformed lines parse to NULL and fall out
     # of the type filter); geometry VALIDITY needs its own guard — a
     # claimed LineString with missing coordinates or a single position is
@@ -50,19 +51,23 @@ def read_geojsonl(spark: SparkSession, path: str,
     # spec-valid 3D (lon, lat, elevation) position would interleave
     # garbage through the flatten-reshape fast path.  Matching OGR: drop
     # features with invalid positions, keep 3D ones but slice to XY.
-    lines = feats.filter(
-        (F.col("f.geometry.type") == "LineString")
-        & F.col("f.geometry.coordinates").isNotNull()
-        & (F.size("f.geometry.coordinates") >= 2)
-        # ... including the ordinates: a JSON null inside a position
-        # parses to a NULL array element and would flow into the
-        # kernels as NaN — only the first two matter (3D slices to XY)
-        & F.forall("f.geometry.coordinates",
-                   lambda p: p.isNotNull() & (F.size(p) >= 2)
-                   & F.get(p, 0).isNotNull() & F.get(p, 1).isNotNull()))
-    geom = F.transform("f.geometry.coordinates", lambda p: F.slice(p, 1, 2))
-    cols = [F.col("f.properties").getItem(c).alias(c) for c in tag_columns]
-    return lines.select(*cols, geom.alias("geom_lonlat"))
+    # ... including the ordinates: a JSON null inside a position parses
+    # to a NULL array element and would flow into the kernels as NaN —
+    # only the first two matter (3D slices to XY).
+    lines = feats.where(
+        f"f.geometry.type = {Q('LineString')}"
+        " AND f.geometry.coordinates IS NOT NULL"
+        " AND size(f.geometry.coordinates) >= 2"
+        " AND forall(f.geometry.coordinates, p -> p IS NOT NULL"
+        " AND size(p) >= 2 AND get(p, 0) IS NOT NULL"
+        " AND get(p, 1) IS NOT NULL)")
+    # one selectExpr: a Column-API loop costs 45 Py4J round trips per tag
+    cols = [f"f.properties[{Q(c)}] AS {Q(c, ident=True)}"
+            for c in tag_columns]
+    return lines.selectExpr(
+        *cols,
+        "transform(f.geometry.coordinates, p -> slice(p, 1, 2))"
+        " AS geom_lonlat")
 
 
 def featurecollection_to_lines(src_path: str, dst_path: str) -> int:

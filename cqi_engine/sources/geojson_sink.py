@@ -13,55 +13,50 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from ..operators.dialect import spark_quote as Q
 
 
-def _feature_struct(df: DataFrame, geometry_col: str | None):
-    props = [c for c in df.columns if c != geometry_col]
-    prop_struct = F.struct(*[F.col(c) for c in props])
+def _feature_struct(df: DataFrame, geometry_col: str | None) -> str:
+    props = ", ".join(Q(c, ident=True) for c in df.columns
+                      if c != geometry_col)
+    members = f"{Q('Feature')} AS type, struct({props}) AS properties"
     if geometry_col is None:
         # no geometry member at all: every row takes the _no_geom path
-        # and _null_geom splices the explicit '"geometry":null' after
-        # serialization (a lit(None) member would be dropped by
+        # and _NULL_GEOM splices the explicit '"geometry":null' after
+        # serialization (a NULL member would be dropped by
         # ignoreNullFields anyway)
-        return F.struct(F.lit("Feature").alias("type"),
-                        prop_struct.alias("properties"))
+        return f"struct({members})"
     # a row-level NULL geometry must null the whole member: serializing
     # the struct as-is would emit {"type":"LineString"} with the
     # coordinates member dropped by ignoreNullFields — spec-invalid
     # (RFC 7946 §3.1.4 requires coordinates in every LineString)
-    geom = F.when(
-        F.col(geometry_col).isNotNull(),
-        F.struct(F.lit("LineString").alias("type"),
-                 F.col(geometry_col).alias("coordinates")))
-    return F.struct(F.lit("Feature").alias("type"),
-                    prop_struct.alias("properties"),
-                    geom.alias("geometry"))
+    g = Q(geometry_col, ident=True)
+    return (f"struct({members}, CASE WHEN {g} IS NOT NULL THEN"
+            f" struct({Q('LineString')} AS type, {g} AS coordinates) END"
+            f" AS geometry)")
 
 
-def _null_geom():
-    """to_json's default ignoreNullFields drops null struct members, which
-    is right for null PROPERTIES (OGR omits unset attributes) but
-    spec-fatal for the geometry member: RFC 7946 requires every Feature to
-    carry a "geometry" key, null or not, and strict parsers reject lines
-    without it.  Keep the default for the feature body and splice an
-    explicit "geometry":null into geometry-less features after
-    serialization — both when the COLUMN is absent and when a ROW's
-    geometry is NULL.  Built lazily: Column construction asserts an
-    active SparkContext, so a module-level constant would crash any
-    import that happens before a session exists."""
-    return F.concat(F.expr("substring(value, 1, length(value) - 1)"),
-                    F.lit(',"geometry":null}'))
+# to_json's default ignoreNullFields drops null struct members, which is
+# right for null PROPERTIES (OGR omits unset attributes) but spec-fatal
+# for the geometry member: RFC 7946 requires every Feature to carry a
+# "geometry" key, null or not, and strict parsers reject lines without
+# it.  Keep the default for the feature body and splice an explicit
+# "geometry":null into geometry-less features after serialization —
+# both when the COLUMN is absent and when a ROW's geometry is NULL.
+_NULL_GEOM = ("concat(substring(value, 1, length(value) - 1), "
+              + Q(',"geometry":null}') + ")")
 
 
 def _features_json(df: DataFrame, gcol: str | None):
-    feats = df.select(
-        F.to_json(_feature_struct(df, gcol)).alias("value"),
-        (F.lit(True) if gcol is None else F.col(gcol).isNull())
-        .alias("_no_geom"))
-    return feats.select(
-        F.when(F.col("_no_geom"), _null_geom())
-        .otherwise(F.col("value")).alias("value"))
+    """One Feature JSON string per row, as two SQL projections: the
+    properties struct lists every column, and a Column-API call per
+    column would cost about 45 Py4J round trips each."""
+    no_geom = "true" if gcol is None else f"{Q(gcol, ident=True)} IS NULL"
+    feats = df.selectExpr(f"to_json({_feature_struct(df, gcol)}) AS value",
+                          f"{no_geom} AS _no_geom")
+    return feats.selectExpr(
+        f"CASE WHEN _no_geom THEN {_NULL_GEOM} ELSE value END AS value")
 
 
 def write_geojsonl(df: DataFrame, path: str,

@@ -218,7 +218,7 @@ def _ensure_tables(spark, index_dir: str) -> tuple[str, str, int]:
             f"CREATE TABLE {tbl} ({cols}, batch STRING) USING PARQUET "
             f"PARTITIONED BY (batch) "
             f"CLUSTERED BY ({key}) SORTED BY ({key}) "
-            f"INTO {nb} BUCKETS LOCATION '{loc}'")
+            f"INTO {nb} BUCKETS LOCATION {D.spark_quote(loc)}")
         spark.catalog.recoverPartitions(tbl)
     return bands_tbl, toks_tbl, nb
 
@@ -526,7 +526,7 @@ def vacuum_index(spark, index_dir: str) -> dict:
             shutil.rmtree(os.path.join(base, d), ignore_errors=True)
             if spark.catalog.tableExists(tbl):
                 spark.sql(f"ALTER TABLE {tbl} DROP IF EXISTS "
-                          f"PARTITION (batch='{part}')")
+                          f"PARTITION (batch={D.spark_quote(part)})")
             removed.append(f"{sub}/{d}")
     for tbl in (bands_tbl, toks_tbl):
         if spark.catalog.tableExists(tbl):

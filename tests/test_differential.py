@@ -1,0 +1,59 @@
+"""Differential test: the Spark flagship path against the pandas reference.
+
+Seeded urban and rural way corpora from the benchmark's generator
+(``perfbench/gen.py``, imported read-only) go through the engine's public
+path — ``read_geojsonl`` -> ``score_way_table`` -> ``write_geojsonl`` —
+and the scored GeoJSONL is read back.  Its multiset of 38-column row
+digests must equal the one from ``kernel.pipeline.score_ways`` +
+``final_projection`` on the same ways (the benchmark's own output check,
+``perfbench/workloads.py``).  Unlike the golden tests this needs no
+external snapshot, so it guards the SQL text of the scan, writeback and
+sink projections in every run.
+"""
+
+from __future__ import annotations
+
+import os
+import sys
+
+import pytest
+
+PERFBENCH = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "perfbench")
+
+
+@pytest.fixture(scope="module")
+def perfbench():
+    sys.path.insert(0, PERFBENCH)
+    try:
+        import gen
+        import workloads
+    finally:
+        sys.path.remove(PERFBENCH)
+    return gen, workloads
+
+
+@pytest.mark.parametrize("kind", ["urban", "rural"])
+def test_spark_path_matches_pandas_reference(spark, tmp_path, perfbench,
+                                             kind):
+    from cqi_engine.operators.pipeline import (WAY_TAG_COLUMNS,
+                                               score_way_table)
+    from cqi_engine.sources.geojson_scan import read_geojsonl
+    from cqi_engine.sources.geojson_sink import write_geojsonl
+
+    gen, wl = perfbench
+    ways = gen.way_corpus(11, kind, 30)
+    src = str(tmp_path / "ways.geojsonl")
+    gen.write_geojsonl(src, ways)
+    out = str(tmp_path / "scored")
+    write_geojsonl(score_way_table(
+        read_geojsonl(spark, src, WAY_TAG_COLUMNS)), out)
+
+    want = wl.reference_scores(ways)
+    if kind == "urban":
+        # the corpus exercises real sidepath matches (urban paths lie
+        # within 22 m of their road; rural ones never do)
+        assert (want["proc_sidepath"] == "yes").any()
+    got = wl.digests(wl.read_geojsonl_props(out))
+    assert sum(got.values()) == len(want)
+    assert got == wl.digests(want)

@@ -390,3 +390,35 @@ def test_vacuum_removes_only_dead_attempts(spark, tmp_path):
     assert got == want
     # idempotent: nothing left to reclaim
     assert dedup.vacuum_index(spark, ix)["removed"] == []
+
+
+def test_resume_and_vacuum_with_quote_in_index_path(spark, tmp_path):
+    """An index directory whose name holds a single quote: re-registering
+    its tables from a fresh catalog (the resume path's CREATE TABLE ...
+    LOCATION) and vacuuming a dead attempt (DROP PARTITION) must quote
+    the path and partition token, not break the SQL text."""
+    from cqi_engine.streaming import dedup
+
+    docs = _docs(spark)
+    ix = str(tmp_path / "it's ix")
+    b1 = docs.filter("doc_id < 250")
+    b2 = docs.filter("doc_id >= 250")
+    dedup.incremental_dedup_batch(spark, b1, ix, 0)
+    for tbl in dedup._table_names(ix):   # a fresh session's catalog
+        spark.sql(f"DROP TABLE {tbl}")   # external: the files stay
+
+    want = [t for t in _run_batches(spark, docs, str(tmp_path / "ref"),
+                                    [(0, 250), (250, 10**9)])
+            if t[0] >= 250]
+    got = sorted(map(tuple,
+                     dedup.incremental_dedup_batch(spark, b2, ix, 1)
+                     .collect()))
+    assert got == want
+
+    dedup.incremental_dedup_batch(spark, b2, ix, 1)   # re-run: dead a0
+    out = dedup.vacuum_index(spark, ix)
+    assert len(out["removed"]) == 2                    # 1 dead part x 2
+    got = sorted(map(tuple,
+                     dedup.incremental_dedup_batch(spark, b2, ix, 1,
+                                                   commit=False).collect()))
+    assert got == want

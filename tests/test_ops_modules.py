@@ -935,6 +935,45 @@ def test_geojsonl_scan_position_validity_and_3d(spark, tmp_path):
         [("three_d", [[13.1, 52.5], [13.2, 52.6]])]
 
 
+def test_geojsonl_scan_odd_tag_names(spark, tmp_path):
+    """Tag names reach the scan's SQL text as a map key literal and a
+    column identifier: quotes, backticks and backslashes must survive
+    both (Spark drops an unknown escape's backslash)."""
+    import json
+
+    from cqi_engine.sources.geojson_scan import read_geojsonl
+
+    tags = ["it's", "back`tick", "c:\\x", "a\\'b`", "dot.ted"]
+    props = {t: f"v{i}" for i, t in enumerate(tags)}
+    p = str(tmp_path / "odd.geojsonl")
+    with open(p, "w", encoding="utf-8") as fh:
+        fh.write(json.dumps({
+            "type": "Feature", "properties": props,
+            "geometry": {"type": "LineString",
+                         "coordinates": [[13.1, 52.1], [13.2, 52.2]]}}))
+    df = read_geojsonl(spark, p, tags + ["absent"])
+    assert df.columns == tags + ["absent", "geom_lonlat"]
+    [row] = df.collect()
+    assert [row[t] for t in tags] == [f"v{i}" for i in range(len(tags))]
+    assert row["absent"] is None
+
+
+def test_spark_quote_round_trips(spark):
+    """spark_quote's literal and identifier forms parse back to the exact
+    text, control characters included."""
+    from cqi_engine.operators.dialect import spark_quote as Q
+
+    texts = ["plain", "it's", "c:\\x", "\\", "'\\'", "\x00null",
+             "tab\there", "back`tick", "ünï ✓"]
+    row = spark.sql("SELECT " + ", ".join(
+        f"{Q(t)} AS {Q(f'c{i}', ident=True)}"
+        for i, t in enumerate(texts))).collect()[0]
+    assert list(row) == texts
+    assert spark.sql("SELECT 1 AS " + ", 2 AS ".join(
+        Q(t, ident=True) for t in texts[:2] + texts[-2:])).columns == \
+        texts[:2] + texts[-2:]
+
+
 # ------------------------------------------------- multi-file merge (S2) ----
 def test_merge_way_files_dedupes_geometries(spark, tmp_path):
     """S2: merge N way files, drop duplicate geometries

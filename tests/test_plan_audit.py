@@ -335,3 +335,40 @@ def test_incremental_dedup_no_corpus_exchange(spark, tmp_path):
                 break
             assert "Exchange" not in lines[j], (
                 f"index scan shuffled before its join:\n{lines[j]}\n{ln}")
+
+
+def test_job_plan_py4j_budget(spark, tmp_path):
+    """Building one flagship job's plan (scan, score_way_table, the
+    GeoJSON sink projection; no action) stays within 2,000 Py4J commands,
+    GC deletes not counted.  Each Column-API call costs about 45 round
+    trips, so a per-column loop over the 183 tag columns (11.7k commands)
+    fails this."""
+    import json
+
+    from cqi_engine.operators.pipeline import (WAY_TAG_COLUMNS,
+                                               score_way_table)
+    from cqi_engine.sources.geojson_scan import read_geojsonl
+    from cqi_engine.sources.geojson_sink import _features_json
+
+    p = str(tmp_path / "one.geojsonl")
+    with open(p, "w", encoding="utf-8") as fh:
+        fh.write(json.dumps({
+            "type": "Feature", "properties": {"id": "w1", "highway": "path"},
+            "geometry": {"type": "LineString",
+                         "coordinates": [[13.4, 52.5], [13.41, 52.51]]}}))
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    kinds = []
+
+    def counted(command, *args, **kwargs):
+        kinds.append(command[:1])
+        return send(command, *args, **kwargs)
+
+    client.send_command = counted
+    try:
+        scored = score_way_table(read_geojsonl(spark, p, WAY_TAG_COLUMNS))
+        _features_json(scored, None)
+    finally:
+        client.send_command = send
+    n = sum(k != "m" for k in kinds)
+    assert 0 < n <= 2000, n
