@@ -244,6 +244,12 @@ def _build_tag_whitelist() -> list[str]:
 
 TAG_WHITELIST = _build_tag_whitelist()
 
+# The tags Spark-side operators read (the sidepath join, its aggregates and
+# the writeback).  The GeoJSONL scan makes columns of these only; every other
+# requested tag rides to the rule kernel packed in one JSON-object column.
+SPARK_TAG_COLUMNS = ("id", "highway", "name", "maxspeed", "layer", "footway",
+                     "is_sidepath", "is_sidepath:of")
+
 # --- derived (engine-written) columns (ref:cycling_quality_index.py:52-107) ---
 DERIVED_COLUMNS = {
     "way_type": "str", "index": "int", "index_10": "int",

@@ -2,7 +2,9 @@
 
 Plan shape (SURVEY.md §3.1 engine lifecycle):
 
-    pages scan ──mapInPandas──> way table (tag cols + lonlat geometry)
+    pages scan ──mapInPandas──> way table (tag cols + lonlat geometry;
+                                the GeoJSONL scan packs the tags no Spark
+                                operator reads into one __tags column)
         ├─ paths ──mapInPandas──> check points (way_id, cell, x, y)   [J1+J2]
         ├─ roads ──mapInPandas──> cell-exploded road index            [J3/J4 prep]
         ├─ points ⋈ roads ON cell (+ null-safe layer) ── hash join    [shuffle 1]
@@ -539,7 +541,10 @@ def score_batches(ways_with_sidepath: DataFrame,
     the single-core win and the memory-bandwidth win (object churn was the
     stage's multicore bottleneck).  Row-identical to the pandas path
     (tests/test_grouped_eval.py); low-duplication batches fall back to the
-    direct kernel.
+    direct kernel.  A packed ``__tags`` column is one signature column
+    like any other, and is unpacked (``unpack_tags``) only on the rows
+    that reach the kernel: the representatives, or the whole batch on the
+    direct path.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -549,6 +554,7 @@ def score_batches(ways_with_sidepath: DataFrame,
     from ..kernel.pipeline import (_GROUP_MIN_DUP, _GROUP_MIN_ROWS,
                                    _post_sidepath_stages, final_projection,
                                    grouped_scatter_plan)
+    from ..sources.geojson_scan import unpack_tags
 
     int_cols = [f.name for f in OUTPUT_SCHEMA.fields
                 if isinstance(f.dataType, T.IntegerType)]
@@ -557,7 +563,10 @@ def score_batches(ways_with_sidepath: DataFrame,
 
     def to_out_table(out_pdf: pd.DataFrame) -> pa.Table:
         for c in int_cols:
-            out_pdf[c] = pd.array(out_pdf[c], dtype="Int32")
+            # final_projection leaves these numeric; a fractional maxspeed
+            # tag ("2.5") reaches proc_maxspeed, so round half-to-even as
+            # the output digests do (webways._digest_cell)
+            out_pdf[c] = pd.array(out_pdf[c].round(), dtype="Int32")
         return pa.Table.from_pandas(out_pdf[out_names], schema=arrow_out,
                                     preserve_index=False)
 
@@ -572,7 +581,7 @@ def score_batches(ways_with_sidepath: DataFrame,
         names = tbl.schema.names
         if n < _GROUP_MIN_ROWS or "id" not in names:
             out = _post_sidepath_stages(
-                tbl.to_pandas(), offset_distance=offset_distance)
+                unpack_tags(tbl.to_pandas()), offset_distance=offset_distance)
             yield from to_out_table(out).to_batches()
             return
         tbl = tbl.combine_chunks()
@@ -599,10 +608,13 @@ def score_batches(ways_with_sidepath: DataFrame,
         k = len(first)
         if k * _GROUP_MIN_DUP >= n:
             out = _post_sidepath_stages(
-                tbl.to_pandas(), offset_distance=offset_distance)
+                unpack_tags(tbl.to_pandas()), offset_distance=offset_distance)
             yield from to_out_table(out).to_batches()
             return
-        rep = tbl.take(pa.array(first, type=pa.int64())).to_pandas()
+        # the packed tags are part of the signature above; only the k
+        # representative rows are unpacked
+        rep = unpack_tags(
+            tbl.take(pa.array(first, type=pa.int64())).to_pandas())
         rep["__sig"] = np.arange(k, dtype=np.int64)
         out_rep = _post_sidepath_stages(rep, project=False,
                                         offset_distance=offset_distance)

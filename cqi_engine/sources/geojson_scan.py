@@ -14,11 +14,16 @@ from __future__ import annotations
 
 import json
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import config as C
 from ..operators.dialect import spark_quote as Q
+
+PACKED_TAGS = "__tags"
 
 _FEATURE_SCHEMA = T.StructType([
     T.StructField("type", T.StringType()),
@@ -35,8 +40,15 @@ def read_geojsonl(spark: SparkSession, path: str,
                   tag_columns: list[str]) -> DataFrame:
     """GeoJSONL -> way table (LineStrings only), distributed.
 
-    Properties land in a MapType and are projected to typed columns, so
-    adding a tag later is a column-pruned map lookup, not a schema change.
+    Properties land in a MapType.  The requested tags that Spark-side
+    operators read (``config.SPARK_TAG_COLUMNS``) become string columns;
+    every other requested tag with a non-null value goes into one
+    ``__tags`` column, a JSON object with its keys sorted (NULL when there
+    are none), which ``score_batches`` unpacks at the kernel's Arrow
+    boundary.  Sorted keys make equal tag tuples equal strings, so the
+    kernel's grouped path groups exactly as it would on columns, and every
+    relation up to the kernel stays about ten columns wide instead of one
+    per whitelisted tag.
     """
     feats = spark.read.text(path).selectExpr(
         f"from_json(value, {Q(_FEATURE_SCHEMA.simpleString())}) AS f")
@@ -63,11 +75,38 @@ def read_geojsonl(spark: SparkSession, path: str,
         " AND get(p, 1) IS NOT NULL)")
     # one selectExpr: a Column-API loop costs 45 Py4J round trips per tag
     cols = [f"f.properties[{Q(c)}] AS {Q(c, ident=True)}"
-            for c in tag_columns]
+            for c in tag_columns if c in C.SPARK_TAG_COLUMNS]
+    packed = [c for c in tag_columns if c not in C.SPARK_TAG_COLUMNS]
+    if packed:
+        keys = ", ".join(Q(c) for c in packed)
+        cols.append(
+            "nullif(to_json(map_from_entries(array_sort(map_entries("
+            f"map_filter(f.properties, (k, v) -> v IS NOT NULL"
+            f" AND k IN ({keys})))))), {Q('{}')})"
+            f" AS {Q(PACKED_TAGS, ident=True)}")
     return lines.selectExpr(
         *cols,
         "transform(f.geometry.coordinates, p -> slice(p, 1, 2))"
         " AS geom_lonlat")
+
+
+def unpack_tags(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Expand ``read_geojsonl``'s packed ``__tags`` JSON objects into one
+    string column per key; the rule kernel NULL-fills the tags no row
+    carries.  Each distinct string is decoded once.  A real column wins
+    over a packed key of the same name (the writeback rewrites ``name``).
+    Frames without ``__tags`` pass through unchanged."""
+    if PACKED_TAGS not in pdf.columns:
+        return pdf
+    codes, uniq = pd.factorize(pdf[PACKED_TAGS])
+    pdf = pdf.drop(columns=PACKED_TAGS)
+    decoded = [json.loads(s) for s in uniq]
+    keys = dict.fromkeys(k for d in decoded for k in d
+                         if k not in pdf.columns)
+    # factorize codes NULL as -1: the appended None
+    cols = {k: np.array([d.get(k) for d in decoded] + [None],
+                        dtype=object)[codes] for k in keys}
+    return pd.concat([pdf, pd.DataFrame(cols, index=pdf.index)], axis=1)
 
 
 def featurecollection_to_lines(src_path: str, dst_path: str) -> int:

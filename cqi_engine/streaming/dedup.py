@@ -91,6 +91,11 @@ _MIXM = (1 << 31) - 1
 N_BUCKETS = int(os.environ.get("SPARK_GRAFT_INDEX_BUCKETS", "32"))
 
 
+class IndexLayoutError(ValueError):
+    """The persisted index is in a layout this module cannot read safely
+    (an older format, or a missing or damaged sidecar)."""
+
+
 def _sig_cols() -> list:
     m = D.MINHASH_PRIME
     return [
@@ -158,9 +163,16 @@ def _manifest_path(index_dir: str) -> str:
 def committed_batches(index_dir: str) -> list[dict]:
     try:
         with open(_manifest_path(index_dir), encoding="utf-8") as fh:
-            return [json.loads(ln) for ln in fh if ln.strip()]
+            entries = [json.loads(ln) for ln in fh if ln.strip()]
     except FileNotFoundError:
         return []
+    # the never-overwrite layout names each batch's attempt partition;
+    # entries without one come from the older overwrite-in-place layout
+    if any("part" not in e for e in entries):
+        raise IndexLayoutError(
+            f"{_manifest_path(index_dir)}: old index layout: rebuild or "
+            "migrate the index (its entries name no attempt 'part')")
+    return entries
 
 
 def _write_manifest(index_dir: str, entries: list[dict]) -> None:
@@ -192,13 +204,30 @@ def _index_buckets(index_dir: str) -> int:
     the wrong count would silently mis-co-locate every join."""
     path = os.path.join(index_dir, "BUCKETS")
     try:
-        with open(path, encoding="ascii") as fh:
-            return int(fh.read().strip())
+        with open(path, encoding="ascii", errors="replace") as fh:
+            text = fh.read().strip()
     except FileNotFoundError:
+        if any(os.path.isdir(os.path.join(index_dir, sub))
+               for sub in ("bands", "toks")):
+            # adopting N_BUCKETS could mis-describe the existing files
+            raise IndexLayoutError(
+                f"{path} is missing but {index_dir} already holds index "
+                "data: its bucket count is unknown; restore BUCKETS or "
+                "rebuild the index") from None
         os.makedirs(index_dir, exist_ok=True)
-        with open(path, "w", encoding="ascii") as fh:
+        with open(path + ".tmp", "w", encoding="ascii") as fh:
             fh.write(str(N_BUCKETS))
+        os.replace(path + ".tmp", path)  # atomic on POSIX
         return N_BUCKETS
+    try:
+        n = int(text)
+    except ValueError:
+        n = 0
+    if n < 1:
+        raise IndexLayoutError(
+            f"{path} is truncated or corrupt ({text!r}): the index's bucket "
+            "count is unknown; restore BUCKETS or rebuild the index")
+    return n
 
 
 def _ensure_tables(spark, index_dir: str) -> tuple[str, str, int]:

@@ -422,3 +422,51 @@ def test_resume_and_vacuum_with_quote_in_index_path(spark, tmp_path):
                      dedup.incremental_dedup_batch(spark, b2, ix, 1,
                                                    commit=False).collect()))
     assert got == want
+
+
+def test_buckets_sidecar_missing_or_truncated_is_refused(spark, tmp_path):
+    """The BUCKETS sidecar is written atomically at creation.  Index data
+    without it, or a truncated one, must stop the batch with a clear
+    error: adopting the session's N_BUCKETS could mis-describe the
+    existing files' bucket layout."""
+    from cqi_engine.streaming import dedup
+
+    docs = _docs(spark)
+    ix = str(tmp_path / "ix")
+    dedup.incremental_dedup_batch(spark, docs.filter("doc_id < 250"), ix, 0)
+    assert sorted(os.listdir(ix)) == ["BUCKETS", "MANIFEST", "bands", "toks"]
+    b2 = docs.filter("doc_id >= 250")
+    sidecar = os.path.join(ix, "BUCKETS")
+    with open(sidecar, "w", encoding="ascii") as fh:
+        fh.write("")                               # truncated
+    with pytest.raises(dedup.IndexLayoutError, match="truncated or corrupt"):
+        dedup.incremental_dedup_batch(spark, b2, ix, 1)
+    os.remove(sidecar)
+    with pytest.raises(dedup.IndexLayoutError,
+                       match="missing but .* already holds index data"):
+        dedup.incremental_dedup_batch(spark, b2, ix, 1)
+    assert not os.path.exists(sidecar)             # N_BUCKETS not adopted
+    assert [e["batch_id"] for e in dedup.committed_batches(ix)] == [0]
+
+
+def test_old_manifest_layout_is_refused(spark, tmp_path):
+    """A manifest written by the older overwrite-in-place layout (entries
+    without ``part``) is refused with a clear message instead of a
+    ``KeyError('part')`` — by the batch path and by vacuum, which must
+    not read an unknown layout as 'nothing is live'."""
+    import json
+
+    from cqi_engine.streaming import dedup
+
+    ix = tmp_path / "ix"
+    (ix / "bands" / "batch=000000").mkdir(parents=True)
+    (ix / "BUCKETS").write_text("32", encoding="ascii")
+    (ix / "MANIFEST").write_text(
+        json.dumps({"batch_id": 0, "n_docs": 250}) + "\n", encoding="utf-8")
+    for call in (lambda: dedup.incremental_dedup_batch(
+                     spark, _docs(spark).filter("doc_id >= 250"), str(ix), 1),
+                 lambda: dedup.vacuum_index(spark, str(ix))):
+        with pytest.raises(dedup.IndexLayoutError,
+                           match="old index layout: rebuild or migrate"):
+            call()
+    assert (ix / "bands" / "batch=000000").is_dir()

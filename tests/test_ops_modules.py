@@ -936,9 +936,10 @@ def test_geojsonl_scan_position_validity_and_3d(spark, tmp_path):
 
 
 def test_geojsonl_scan_odd_tag_names(spark, tmp_path):
-    """Tag names reach the scan's SQL text as a map key literal and a
-    column identifier: quotes, backticks and backslashes must survive
-    both (Spark drops an unknown escape's backslash)."""
+    """Tag names reach the scan's SQL text as map key literals (the
+    packed-tag key filter) and as column identifiers: quotes, backticks
+    and backslashes must survive both (Spark drops an unknown escape's
+    backslash)."""
     import json
 
     from cqi_engine.sources.geojson_scan import read_geojsonl
@@ -948,14 +949,21 @@ def test_geojsonl_scan_odd_tag_names(spark, tmp_path):
     p = str(tmp_path / "odd.geojsonl")
     with open(p, "w", encoding="utf-8") as fh:
         fh.write(json.dumps({
-            "type": "Feature", "properties": props,
+            "type": "Feature", "properties": {**props, "highway": "path"},
             "geometry": {"type": "LineString",
                          "coordinates": [[13.1, 52.1], [13.2, 52.2]]}}))
     df = read_geojsonl(spark, p, tags + ["absent"])
-    assert df.columns == tags + ["absent", "geom_lonlat"]
+    assert df.columns == ["__tags", "geom_lonlat"]
     [row] = df.collect()
-    assert [row[t] for t in tags] == [f"v{i}" for i in range(len(tags))]
-    assert row["absent"] is None
+    packed = json.loads(row["__tags"])
+    assert packed == props          # exact values; absent and unrequested
+    assert "absent" not in packed   # (highway) keys are left out
+    # a tag Spark-side operators read comes out as a real column
+    df = read_geojsonl(spark, p, ["highway", "dot.ted"])
+    assert df.columns == ["highway", "__tags", "geom_lonlat"]
+    [row] = df.collect()
+    assert row["highway"] == "path"
+    assert json.loads(row["__tags"]) == {"dot.ted": props["dot.ted"]}
 
 
 def test_spark_quote_round_trips(spark):

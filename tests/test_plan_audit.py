@@ -337,18 +337,8 @@ def test_incremental_dedup_no_corpus_exchange(spark, tmp_path):
                 f"index scan shuffled before its join:\n{lines[j]}\n{ln}")
 
 
-def test_job_plan_py4j_budget(spark, tmp_path):
-    """Building one flagship job's plan (scan, score_way_table, the
-    GeoJSON sink projection; no action) stays within 2,000 Py4J commands,
-    GC deletes not counted.  Each Column-API call costs about 45 round
-    trips, so a per-column loop over the 183 tag columns (11.7k commands)
-    fails this."""
+def _one_feature_file(tmp_path) -> str:
     import json
-
-    from cqi_engine.operators.pipeline import (WAY_TAG_COLUMNS,
-                                               score_way_table)
-    from cqi_engine.sources.geojson_scan import read_geojsonl
-    from cqi_engine.sources.geojson_sink import _features_json
 
     p = str(tmp_path / "one.geojsonl")
     with open(p, "w", encoding="utf-8") as fh:
@@ -356,6 +346,23 @@ def test_job_plan_py4j_budget(spark, tmp_path):
             "type": "Feature", "properties": {"id": "w1", "highway": "path"},
             "geometry": {"type": "LineString",
                          "coordinates": [[13.4, 52.5], [13.41, 52.51]]}}))
+    return p
+
+
+def test_job_plan_py4j_budget(spark, tmp_path):
+    """Building one flagship job's plan (scan, score_way_table, the
+    GeoJSON sink projection; no action) stays within 1,200 Py4J commands,
+    GC deletes not counted (about 1,000 with the tags packed into one
+    column).  Each Column-API call costs about 45 round trips, so a
+    per-column loop over the 183 tag columns (11.7k commands) fails this,
+    and so do the 183 tag columns carried to the kernel (about 1.7k: the
+    wide writeback projection list and its schema round trips)."""
+    from cqi_engine.operators.pipeline import (WAY_TAG_COLUMNS,
+                                               score_way_table)
+    from cqi_engine.sources.geojson_scan import read_geojsonl
+    from cqi_engine.sources.geojson_sink import _features_json
+
+    p = _one_feature_file(tmp_path)
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
     kinds = []
@@ -371,4 +378,24 @@ def test_job_plan_py4j_budget(spark, tmp_path):
     finally:
         client.send_command = send
     n = sum(k != "m" for k in kinds)
-    assert 0 < n <= 2000, n
+    assert 0 < n <= 1200, n
+
+
+def test_kernel_input_is_narrow(spark, tmp_path):
+    """With the whole tag whitelist requested, the relation feeding
+    score_batches' MapInArrow carries the scan's Spark-side tag columns,
+    the packed ``__tags`` column and the three proc_* writeback columns
+    (12), not one column per whitelisted tag (186): the width every
+    relation between the scan and the kernel shares."""
+    import re
+
+    from cqi_engine.operators.pipeline import (WAY_TAG_COLUMNS,
+                                               score_way_table)
+    from cqi_engine.sources.geojson_scan import read_geojsonl
+
+    scored = score_way_table(
+        read_geojsonl(spark, _one_feature_file(tmp_path), WAY_TAG_COLUMNS))
+    widths = [int(n) for n in re.findall(
+        r"\) MapInArrow\s*\nInput \[(\d+)\]", plan_text(scored))]
+    assert len(widths) == 1, widths
+    assert widths[0] <= 14, widths

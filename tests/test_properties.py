@@ -3,10 +3,15 @@ the test class the reference lacks entirely (SURVEY §5)."""
 
 from __future__ import annotations
 
+import json
+import os
+import sys
+
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from cqi_engine import config as C
 from cqi_engine.geometry import (line_length, lonlat_to_metric,
                                  metric_to_lonlat, offset_polyline,
                                  point_to_polyline_dist, sample_points_along)
@@ -201,3 +206,74 @@ def test_sample_points_along_batch_matches_per_way(ways, spacing):
                                    rtol=1e-12, atol=1e-7)
         row += n
     assert row == len(way)
+
+
+# --- packed tags: scan -> kernel round trip ---------------------------------
+
+_PERFBENCH = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "perfbench")
+# every tag a Spark-side operator reads, except the way's id and its role
+_SPATIAL_TAGS = [t for t in C.SPARK_TAG_COLUMNS if t not in ("id", "highway")]
+_TAG_KEYS = st.one_of(
+    st.sampled_from(_SPATIAL_TAGS),
+    # tags most rules read, so that packed values move the scores
+    st.sampled_from(["surface", "smoothness", "width", "lit", "bicycle",
+                     "segregated", "oneway", "cycleway", "cycleway:right",
+                     "lanes", "traffic_sign", "access", "bicycle_road"]),
+    st.sampled_from([t for t in C.TAG_WHITELIST if t not in ("id",
+                                                             "highway")]),
+    st.sampled_from(["note", "source:maxspeed", "it's", "c:\\x"]))
+_TAG_VALUES = st.one_of(
+    st.none(),
+    st.sampled_from(["", "none", "walk", "yes", "no", "sidewalk", "lane",
+                     "0", "30", "50", "2.5", "-1", "it's", 'say "hi"',
+                     "c:\\x", "\\", "Straße", "東京 ✓"]),
+    st.text(alphabet="ab1.'\"\\é✓ ", max_size=4))
+
+
+@given(st.lists(st.dictionaries(_TAG_KEYS, _TAG_VALUES, max_size=6),
+                min_size=1, max_size=3,
+                unique_by=lambda d: json.dumps(d, sort_keys=True)),
+       st.sampled_from([4, 90]), st.integers(min_value=0, max_value=99))
+@settings(max_examples=10, deadline=None, derandomize=True)
+def test_packed_tags_round_trip(spark, drawn, n_blocks, seed):
+    """Drawn tag dicts (whitelisted keys, spatial ones included; values
+    with quotes, backslashes, non-ASCII text, ``""``, ``none``, ``walk``
+    and numeric strings; JSON nulls; keys outside the whitelist) on the
+    geometry of a seeded corpus: the Spark path — ``read_geojsonl``,
+    which packs the tags no Spark operator reads into ``__tags``, then
+    ``score_way_table`` -> ``write_geojsonl`` — must give the digest
+    multiset of ``kernel.pipeline.score_ways`` + ``final_projection``.
+    Each way takes the drawn dicts in turn, so 90 blocks (270 ways, up
+    to three distinct dicts) reach the kernel's grouped path, which must
+    tell the dicts apart, and 4 blocks its direct one.  The corpus is
+    the benchmark's isolated-block kind: each path lies near its own
+    road only, so no sidepath name vote can tie (the engine and the
+    pandas path break ties differently, a known open difference).
+    Derandomized: one job per example, the same ten examples each run."""
+    import tempfile
+
+    sys.path.insert(0, _PERFBENCH)
+    try:
+        import gen
+        import workloads as wl
+    finally:
+        sys.path.remove(_PERFBENCH)
+    from cqi_engine.operators.pipeline import (WAY_TAG_COLUMNS,
+                                               score_way_table)
+    from cqi_engine.sources.geojson_scan import read_geojsonl
+    from cqi_engine.sources.geojson_sink import write_geojsonl
+
+    ways = [(wid, {**drawn[i % len(drawn)], "highway": tags["highway"]},
+             coords)
+            for i, (wid, tags, coords)
+            in enumerate(gen.way_corpus(seed, "pool", n_blocks))]
+    with tempfile.TemporaryDirectory() as tmp:
+        src, out = os.path.join(tmp, "ways.geojsonl"), os.path.join(tmp, "o")
+        gen.write_geojsonl(src, ways)
+        write_geojsonl(score_way_table(
+            read_geojsonl(spark, src, WAY_TAG_COLUMNS)), out)
+        got = wl.digests(wl.read_geojsonl_props(out))
+    want = wl.reference_scores(ways)
+    assert sum(got.values()) == len(want)
+    assert got == wl.digests(want)
