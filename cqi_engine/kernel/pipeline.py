@@ -125,11 +125,21 @@ def score_ways(ways: pd.DataFrame, with_sidepath: bool = True) -> pd.DataFrame:
     return _post_sidepath_stages(df, project=False)
 
 
+def int32_or_null(s: pd.Series) -> pd.Series:
+    """The rule for the integer output columns (int32 on the Spark path):
+    a value that is not finite or rounds outside int32 is NULL.  A road's
+    ``maxspeed=inf`` or ``1e12`` tag reaches ``proc_maxspeed`` as such."""
+    v = s.to_numpy(dtype=float, na_value=np.nan)
+    r = np.round(v)
+    ok = np.isnan(v) | ((r >= -2 ** 31) & (r <= 2 ** 31 - 1))
+    return s if ok.all() else s.where(ok)
+
+
 def final_projection(scored: pd.DataFrame) -> pd.DataFrame:
     out = scored[C.OUTPUT_COLUMNS].copy()
     for int_col in ("index", "index_10", "stress_level", "base_index",
                     "proc_maxspeed", "filter_usable"):
-        out[int_col] = get_number(out[int_col])
+        out[int_col] = int32_or_null(get_number(out[int_col]))
     return out
 
 

@@ -553,7 +553,7 @@ def score_batches(ways_with_sidepath: DataFrame,
     # local import to avoid cycle
     from ..kernel.pipeline import (_GROUP_MIN_DUP, _GROUP_MIN_ROWS,
                                    _post_sidepath_stages, final_projection,
-                                   grouped_scatter_plan)
+                                   grouped_scatter_plan, int32_or_null)
     from ..sources.geojson_scan import unpack_tags
 
     int_cols = [f.name for f in OUTPUT_SCHEMA.fields
@@ -565,8 +565,11 @@ def score_batches(ways_with_sidepath: DataFrame,
         for c in int_cols:
             # final_projection leaves these numeric; a fractional maxspeed
             # tag ("2.5") reaches proc_maxspeed, so round half-to-even as
-            # the output digests do (webways._digest_cell)
-            out_pdf[c] = pd.array(out_pdf[c].round(), dtype="Int32")
+            # the output digests do (webways._digest_cell).  The cast
+            # raises on what int32 cannot hold: NULL it by the rule
+            # final_projection applies (int32_or_null)
+            out_pdf[c] = pd.array(int32_or_null(out_pdf[c]).round(),
+                                  dtype="Int32")
         return pa.Table.from_pandas(out_pdf[out_names], schema=arrow_out,
                                     preserve_index=False)
 

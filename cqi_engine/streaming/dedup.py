@@ -515,10 +515,18 @@ def compact_index(spark, index_dir: str) -> dict:
         *[os.path.join(index_dir, "toks", f"batch={p}") for p in parts])
     part = _next_attempt_part(index_dir, "compact")
     _write_attempt(spark, toks, bands, index_dir, part)
-    n_docs = sum(int(e["n_docs"]) for e in entries)
+    # a batch replayed after an earlier compaction has its own entry next
+    # to the compacted one that already counts its docs: read its rows
+    # (the union stays the seen-set) but count its docs once
+    folded = {int(b) for e in entries for b in e.get("compacted_from", ())
+              if int(b) >= 0}
+    n_docs = sum(int(e["n_docs"]) for e in entries
+                 if int(e["batch_id"]) not in folded)
+    batch_ids = folded | {int(e["batch_id"]) for e in entries
+                          if int(e["batch_id"]) >= 0}
     _write_manifest(index_dir, [{
         "batch_id": -1, "part": part, "n_docs": n_docs,
-        "compacted_from": [int(e["batch_id"]) for e in entries]}])
+        "compacted_from": sorted(batch_ids)}])
     return {"compacted": True, "n_entries": len(entries),
             "part": part, "n_docs": n_docs}
 

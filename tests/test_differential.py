@@ -57,3 +57,37 @@ def test_spark_path_matches_pandas_reference(spark, tmp_path, perfbench,
     got = wl.digests(wl.read_geojsonl_props(out))
     assert sum(got.values()) == len(want)
     assert got == wl.digests(want)
+
+
+def test_non_finite_and_huge_maxspeed(spark, tmp_path, perfbench):
+    """A road's ``maxspeed`` of ``inf``, ``nan`` or ``1e12`` reaches the
+    int32 ``proc_maxspeed`` column.  Both paths apply one rule at the output
+    boundary: an integer output that is not finite or falls outside int32
+    is NULL; ``2.5`` stays a number (rounded half-to-even on the int32
+    Spark path, as the digests round it).  Each value sits on the road of
+    its own isolated block, so its sidepaths carry it too."""
+    from cqi_engine.operators.pipeline import (WAY_TAG_COLUMNS,
+                                               score_way_table)
+    from cqi_engine.sources.geojson_scan import read_geojsonl
+    from cqi_engine.sources.geojson_sink import write_geojsonl
+
+    gen, wl = perfbench
+    speeds = {"w0_0": "inf", "w1_0": "nan", "w2_0": "1e12", "w3_0": "2.5"}
+    ways = [(wid, {**tags, "maxspeed": speeds[wid]} if wid in speeds
+             else tags, coords)
+            for wid, tags, coords in gen.way_corpus(3, "pool", 4)]
+    src = str(tmp_path / "ways.geojsonl")
+    gen.write_geojsonl(src, ways)
+    out = str(tmp_path / "scored")
+    write_geojsonl(score_way_table(
+        read_geojsonl(spark, src, WAY_TAG_COLUMNS)), out)
+
+    want = wl.reference_scores(ways)
+    got = wl.read_geojsonl_props(out)
+    for scored, expect in ((want, 2.5), (got, 2)):
+        roads = scored[scored["id"].isin(speeds)].groupby("id")
+        speed = roads["proc_maxspeed"].first()
+        assert speed[["w0_0", "w1_0", "w2_0"]].isna().all(), speed
+        assert speed["w3_0"] == expect, speed
+    assert sum(wl.digests(got).values()) == len(want)
+    assert wl.digests(got) == wl.digests(want)

@@ -350,6 +350,28 @@ def test_replay_after_compaction_is_harmless(spark, tmp_path):
     assert got == want
 
 
+def test_compaction_after_replay_counts_docs_once(spark, tmp_path):
+    """Commit batches 0 and 1, compact, replay batch 1, compact again:
+    the compacted entry already counts batch 1's docs, so the second
+    compaction's ``n_docs`` is still the docs of batches 0 and 1, and it
+    carries every batch id folded so far."""
+    from cqi_engine.streaming import dedup
+
+    docs = _docs(spark)
+    ix = str(tmp_path / "ix")
+    b0 = docs.filter("doc_id < 250")
+    b1 = docs.filter("doc_id >= 250")
+    dedup.incremental_dedup_batch(spark, b0, ix, 0)
+    dedup.incremental_dedup_batch(spark, b1, ix, 1)
+    dedup.compact_index(spark, ix)
+    dedup.incremental_dedup_batch(spark, b1, ix, 1)  # replay batch 1
+    assert [e["batch_id"] for e in dedup.committed_batches(ix)] == [-1, 1]
+    summary = dedup.compact_index(spark, ix)
+    [entry] = dedup.committed_batches(ix)
+    assert summary["n_docs"] == entry["n_docs"] == docs.count()
+    assert entry["compacted_from"] == [0, 1]
+
+
 def test_vacuum_removes_only_dead_attempts(spark, tmp_path):
     """Vacuum reclaims superseded re-run attempts, crashed writes, and
     pre-compaction partitions — and cannot change any visible state:

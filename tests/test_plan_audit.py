@@ -399,3 +399,24 @@ def test_kernel_input_is_narrow(spark, tmp_path):
         r"\) MapInArrow\s*\nInput \[(\d+)\]", plan_text(scored))]
     assert len(widths) == 1, widths
     assert widths[0] <= 14, widths
+
+
+def test_job_python_boundaries(spark, tmp_path):
+    """One flagship job (``read_geojsonl`` -> ``score_way_table``) crosses
+    into Python four times: the sidepath join's check points, road cells
+    and refine (``MapInPandas``), and the rule kernel (``MapInArrow``).
+    Each Python boundary costs one task hand-off per partition: a Python
+    task that ships its rows over Arrow and, before any UDF runs, sets up
+    the worker (``importlib.invalidate_caches()``, see
+    ``cqi_engine/_zipimport.py``).  A new boundary has to pay for that."""
+    import re
+
+    from cqi_engine.operators.pipeline import (WAY_TAG_COLUMNS,
+                                               score_way_table)
+    from cqi_engine.sources.geojson_scan import read_geojsonl
+
+    scored = score_way_table(
+        read_geojsonl(spark, _one_feature_file(tmp_path), WAY_TAG_COLUMNS))
+    nodes = re.findall(r"^\(\d+\) (MapInPandas|MapInArrow)\b",
+                       plan_text(scored), flags=re.M)
+    assert len(nodes) == 4, nodes
