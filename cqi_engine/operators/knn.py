@@ -27,7 +27,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from ..geometry import point_to_polyline_dist
 
@@ -61,20 +60,20 @@ def _knn_probe(points: DataFrame, way_cells: DataFrame, k: int = 3,
     """
     pt_id_t = points.schema["pt_id"].dataType
     road_id_t = way_cells.schema["road_id"].dataType
-    offsets = ring_offsets(max_ring)
-    off_df = F.array(*[
-        F.struct(F.lit(r).alias("ring"), F.lit(dx).alias("dx"),
-                 F.lit(dy).alias("dy")) for r, dx, dy in offsets])
+    # the offsets are one SQL literal: as a Column-API list they cost
+    # about 45 Py4J round trips per term, (2R+1)^2 terms
+    offsets = ", ".join(
+        f"named_struct('ring', {r}, 'dx', {dx}, 'dy', {dy})"
+        for r, dx, dy in ring_offsets(max_ring))
     probes = (points
-              .withColumn("o", F.explode(off_df))
-              .select("*", F.col("o.ring").alias("ring"),
-                      ((F.col("cx") + F.col("o.dx")) * cell_mult
-                       + (F.col("cy") + F.col("o.dy"))).alias("probe_cell"))
-              .drop("o"))
+              .selectExpr("pt_id", "x", "y", "cx", "cy",
+                          f"inline(array({offsets}))")
+              .selectExpr("pt_id", "x", "y", "ring",
+                          f"(cx + dx) * {int(cell_mult)} + (cy + dy) "
+                          "as probe_cell"))
 
-    idx = way_cells.withColumn(
-        "probe_cell",
-        (F.col("cellx") * cell_mult + F.col("celly")).cast("long"))
+    idx = way_cells.selectExpr(
+        "*", f"cast(cellx * {int(cell_mult)} + celly as bigint) as probe_cell")
 
     cand = probes.join(idx.hint("shuffle_hash"), "probe_cell", "inner")
 
@@ -121,12 +120,11 @@ def _knn_probe(points: DataFrame, way_cells: DataFrame, k: int = 3,
     # SMALLEST ring (deterministic — dist is identical across duplicates,
     # min() makes `ring` well-defined instead of dropDuplicates' arbitrary
     # pick), then rank globally inside the bounded disk.
-    dedup = refined.groupBy("pt_id", "road_id").agg(
-        F.min("ring").alias("ring"), F.min("dist").alias("dist"))
-    w = Window.partitionBy("pt_id").orderBy(F.asc("dist"), F.asc("road_id"))
-    return (dedup
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return (refined.groupBy("pt_id", "road_id")
+            .agg(F.expr("min(ring) as ring"), F.expr("min(dist) as dist"))
+            .selectExpr("*", "row_number() over (partition by pt_id "
+                        "order by dist asc, road_id asc) as rank")
+            .where(f"rank <= {int(k)}"))
 
 
 def knn_ways(points: DataFrame, way_cells: DataFrame, k: int = 3,
@@ -168,12 +166,12 @@ def knn_ways(points: DataFrame, way_cells: DataFrame, k: int = 3,
         crossJoin of the two extent aggregates).  None = either side empty.
         """
         if not ring_cap_cache:
-            ext = way_cells.agg(
-                F.min("cellx").alias("ax"), F.max("cellx").alias("bx"),
-                F.min("celly").alias("ay"), F.max("celly").alias("by"))
-            pext = points.agg(
-                F.min("cx").alias("pax"), F.max("cx").alias("pbx"),
-                F.min("cy").alias("pay"), F.max("cy").alias("pby"))
+            ext = way_cells.selectExpr(
+                "min(cellx) as ax", "max(cellx) as bx",
+                "min(celly) as ay", "max(celly) as `by`")
+            pext = points.selectExpr(
+                "min(cx) as pax", "max(cx) as pbx",
+                "min(cy) as pay", "max(cy) as pby")
             r = ext.crossJoin(pext).collect()[0]
             if r["ax"] is None or r["pax"] is None:
                 ring_cap_cache.append(None)
@@ -186,27 +184,28 @@ def knn_ways(points: DataFrame, way_cells: DataFrame, k: int = 3,
         return ring_cap_cache[0]
 
     eps = 1e-6  # refine rounds dist to 6 dp; don't let rounding flip floor
+    # the ring that proves a point's k-th distance dk (SQL text: each
+    # Column-API call costs about 45 Py4J round trips)
+    dk_ring = f"floor((dk + {eps!r}D) / {float(cell_size)!r}D) + 1"
     resolved = []
     cur_ring = max_ring
     cur = base.persist()
     cur_points = points
     while True:
         stats = cur.groupBy("pt_id").agg(
-            F.count("*").alias("n"), F.max("dist").alias("dk"))
+            F.expr("count(*) as n"), F.expr("max(dist) as dk"))
         # zero-candidate points never reach `stats`: start from the probe's
         # point set so they are flagged, not silently dropped
         stats = (cur_points.select("pt_id").distinct()
                  .join(stats, "pt_id", "left"))
-        proven_ok = ((F.col("n") >= k) &
-                     (F.floor((F.col("dk") + F.lit(eps)) / F.lit(cell_size))
-                      + 1 <= F.lit(cur_ring)))
-        bad = stats.filter(~F.coalesce(proven_ok, F.lit(False))) \
-            .select("pt_id",
-                    F.when(F.col("n") >= k, F.floor(
-                        (F.col("dk") + F.lit(eps)) / F.lit(cell_size)) + 1)
-                    .alias("need_ring")).persist()
-        agg = bad.agg(F.count("*").alias("c"),
-                      F.max("need_ring").alias("need")).collect()[0]
+        bad = (stats
+               .where(f"not coalesce(n >= {int(k)} and "
+                      f"{dk_ring} <= {int(cur_ring)}, false)")
+               .selectExpr("pt_id", f"case when n >= {int(k)} "
+                           f"then {dk_ring} end as need_ring")
+               .persist())
+        agg = bad.selectExpr("count(*) as c",
+                             "max(need_ring) as need").collect()[0]
         if agg["c"] == 0:
             resolved.append(cur)
             bad.unpersist()

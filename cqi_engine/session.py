@@ -23,6 +23,11 @@ RUNTIME_CONF = {
     # kernels become stragglers.  8 MB keeps post-shuffle parallelism
     # at small-batch row counts without exploding task counts.
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
+    # without it, a persisted relation whose plan has exchanges loses AQE
+    # coalescing and AQE skew-join handling: every stage over it runs
+    # spark.sql.shuffle.partitions tasks (knn_ways' probe, Python refine
+    # included: 32 where AQE runs 1)
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
 }
 

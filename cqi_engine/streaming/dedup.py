@@ -498,26 +498,30 @@ def compact_index(spark, index_dir: str) -> dict:
     The compacted entry carries ``batch_id -1`` (sorts first; real feed
     ids are >= 0, so a replayed stream batch can never REPLACE it — a
     replay after compaction appends its rows redundantly next to the
-    compacted copy, which is wasted bytes but never a wrong answer: the
-    min-aggregation collapses duplicate candidate pairs, and the drop
-    predicate is seen-set-membership, unchanged by duplicates).
+    compacted copy, which is wasted bytes until the next compaction but
+    never a wrong answer: the min-aggregation collapses duplicate
+    candidate pairs, and the drop predicate is seen-set-membership,
+    unchanged by duplicates).
 
     Dedup semantics are untouched: the seen-set is the union of committed
-    rows, and compaction rewrites exactly that union.  Returns a small
-    summary dict."""
+    rows, and compaction rewrites exactly that union, each row once.
+    Returns a small summary dict."""
     entries = committed_batches(index_dir)
     if len(entries) <= 1:
         return {"compacted": False, "n_entries": len(entries)}
     parts = [e["part"] for e in entries]
+    # distinct: a batch replayed after an earlier compaction has its own
+    # entry next to the compacted one that already holds its rows; the
+    # distinct union is the same seen-set, written once
     bands = spark.read.parquet(
-        *[os.path.join(index_dir, "bands", f"batch={p}") for p in parts])
+        *[os.path.join(index_dir, "bands", f"batch={p}")
+          for p in parts]).distinct()
     toks = spark.read.parquet(
-        *[os.path.join(index_dir, "toks", f"batch={p}") for p in parts])
+        *[os.path.join(index_dir, "toks", f"batch={p}")
+          for p in parts]).distinct()
     part = _next_attempt_part(index_dir, "compact")
     _write_attempt(spark, toks, bands, index_dir, part)
-    # a batch replayed after an earlier compaction has its own entry next
-    # to the compacted one that already counts its docs: read its rows
-    # (the union stays the seen-set) but count its docs once
+    # ... and whose docs it already counts: count them once
     folded = {int(b) for e in entries for b in e.get("compacted_from", ())
               if int(b) >= 0}
     n_docs = sum(int(e["n_docs"]) for e in entries

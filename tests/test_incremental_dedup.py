@@ -372,6 +372,41 @@ def test_compaction_after_replay_counts_docs_once(spark, tmp_path):
     assert entry["compacted_from"] == [0, 1]
 
 
+def test_replay_then_compact_writes_each_row_once(spark, tmp_path):
+    """Two replay-then-compact cycles: the compacted partition holds each
+    band and token row once (one ``toks`` row per doc), and a later
+    batch's annotations match plain incremental batches."""
+    from cqi_engine.streaming import dedup
+
+    docs = _docs(spark)
+    ix = str(tmp_path / "ix")
+    cuts = [(0, 200), (200, 350), (350, 10**9)]
+    b0, b1, b2 = [docs.filter(f"doc_id >= {lo} and doc_id < {hi}")
+                  for lo, hi in cuts]
+    dedup.incremental_dedup_batch(spark, b0, ix, 0)
+    dedup.incremental_dedup_batch(spark, b1, ix, 1)
+    dedup.compact_index(spark, ix)
+    for _ in range(2):
+        dedup.incremental_dedup_batch(spark, b1, ix, 1)  # replay batch 1
+        dedup.compact_index(spark, ix)
+
+    [entry] = dedup.committed_batches(ix)
+    bands = spark.read.parquet(
+        os.path.join(ix, "bands", f"batch={entry['part']}"))
+    toks = spark.read.parquet(
+        os.path.join(ix, "toks", f"batch={entry['part']}"))
+    assert bands.count() == bands.distinct().count()
+    assert toks.count() == toks.distinct().count() == (
+        b0.count() + b1.count())
+
+    got = sorted(map(tuple,
+                     dedup.incremental_dedup_batch(spark, b2, ix, 2,
+                                                   commit=False).collect()))
+    want = [t for t in _run_batches(spark, docs, str(tmp_path / "ref"), cuts)
+            if t[0] >= 350]
+    assert got == want
+
+
 def test_vacuum_removes_only_dead_attempts(spark, tmp_path):
     """Vacuum reclaims superseded re-run attempts, crashed writes, and
     pre-compaction partitions — and cannot change any visible state:

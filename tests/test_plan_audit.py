@@ -349,6 +349,25 @@ def _one_feature_file(tmp_path) -> str:
     return p
 
 
+@contextlib.contextmanager
+def py4j_commands(spark):
+    """Count the Py4J commands the block sends, GC deletes not counted;
+    yields a function that returns the count."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    kinds = []
+
+    def counted(command, *args, **kwargs):
+        kinds.append(command[:1])
+        return send(command, *args, **kwargs)
+
+    client.send_command = counted
+    try:
+        yield lambda: sum(k != "m" for k in kinds)
+    finally:
+        client.send_command = send
+
+
 def test_job_plan_py4j_budget(spark, tmp_path):
     """Building one flagship job's plan (scan, score_way_table, the
     GeoJSON sink projection; no action) stays within 1,200 Py4J commands,
@@ -363,22 +382,32 @@ def test_job_plan_py4j_budget(spark, tmp_path):
     from cqi_engine.sources.geojson_sink import _features_json
 
     p = _one_feature_file(tmp_path)
-    client = spark.sparkContext._gateway._gateway_client
-    send = client.send_command
-    kinds = []
-
-    def counted(command, *args, **kwargs):
-        kinds.append(command[:1])
-        return send(command, *args, **kwargs)
-
-    client.send_command = counted
-    try:
+    with py4j_commands(spark) as count:
         scored = score_way_table(read_geojsonl(spark, p, WAY_TAG_COLUMNS))
         _features_json(scored, None)
-    finally:
-        client.send_command = send
-    n = sum(k != "m" for k in kinds)
+    n = count()
     assert 0 < n <= 1200, n
+
+
+def test_knn_probe_py4j_flat_in_ring(spark):
+    """Building the kNN probe costs the same Py4J commands at max_ring 1
+    (9 offsets) and 4 (81 offsets): the offset list is one SQL literal,
+    not (2R+1)^2 Column-API structs."""
+    from cqi_engine.operators.knn import _knn_probe
+
+    points = spark.createDataFrame(
+        [(1, 0.5, 0.5, 0, 0)], "pt_id bigint, x double, y double, cx int, "
+        "cy int")
+    cells = spark.createDataFrame(
+        [(7, 0, 0, [[0.0, 0.0]])], "road_id bigint, cellx int, celly int, "
+        "road_geom array<array<double>>")
+    _knn_probe(points, cells, 3, 1)  # warm-up
+    counts = {}
+    for ring in (1, 4):
+        with py4j_commands(spark) as count:
+            _knn_probe(points, cells, 3, ring)
+        counts[ring] = count()
+    assert counts[1] == counts[4], counts
 
 
 def test_kernel_input_is_narrow(spark, tmp_path):
