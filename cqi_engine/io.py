@@ -47,12 +47,6 @@ def read_geojson_lines(path: str) -> pd.DataFrame:
     return pd.DataFrame(data)
 
 
-def feature_frame(fc: dict) -> pd.DataFrame:
-    """Properties-only frame from an in-memory FeatureCollection."""
-    return pd.DataFrame([dict(f.get("properties") or {})
-                         for f in fc.get("features", [])])
-
-
 def _json_default(v):
     """iterrows yields numpy scalars (np.int64 is NOT json-serializable;
     np.float64 only passes because it subclasses float) — unwrap them."""

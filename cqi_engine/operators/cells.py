@@ -13,8 +13,7 @@ Properties used by the engine:
   * equi-joinable int64 ids (the spatial join becomes a hash join on cell_id)
   * parent/child via integer arithmetic (two-level aggregation rollups)
   * `grid_disk` ring expansion for kNN candidate search
-  * expressible in pure ANSI SQL (floor + arithmetic), so every cell-indexed
-    query has a DuckDB oracle
+  * plain integer arithmetic (floor + multiply-add), vectorized in numpy
 
 Resolution 14 (64 m) is the join resolution: 64 >= 2 x 22 m means a point's
 own cell plus the road's padded covering set guarantees no missed candidate.
@@ -23,8 +22,6 @@ own cell plus the road's padded covering set guarantees no missed candidate.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 OFFSET = 1 << 20
 SHIFT = 1 << 26
@@ -41,21 +38,6 @@ def cell_id_np(x: np.ndarray, y: np.ndarray, res: int = JOIN_RES) -> np.ndarray:
     ix = np.floor(np.asarray(x) / size).astype(np.int64) + OFFSET
     iy = np.floor(np.asarray(y) / size).astype(np.int64) + OFFSET
     return (np.int64(res) * SHIFT + ix) * SHIFT + iy
-
-
-def cell_id_col(x: Column, y: Column, res: int = JOIN_RES) -> Column:
-    size = cell_size(res)
-    ix = F.floor(x / F.lit(size)).cast("long") + F.lit(OFFSET)
-    iy = F.floor(y / F.lit(size)).cast("long") + F.lit(OFFSET)
-    return (F.lit(res) * F.lit(SHIFT) + ix) * F.lit(SHIFT) + iy
-
-
-def cell_id_sql(x_expr: str, y_expr: str, res: int = JOIN_RES) -> str:
-    """ANSI-SQL rendering of the same formula (DuckDB oracle)."""
-    size = cell_size(res)
-    return (f"(({res} * {SHIFT} + (CAST(FLOOR(({x_expr}) / {size}) AS BIGINT)"
-            f" + {OFFSET})) * {SHIFT}"
-            f" + (CAST(FLOOR(({y_expr}) / {size}) AS BIGINT) + {OFFSET}))")
 
 
 def decode_cell(cell: int) -> tuple[int, int, int]:

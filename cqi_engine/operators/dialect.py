@@ -159,11 +159,12 @@ def token_hashes(col: str, dialect: str) -> str:
                 dialect)
 
 
-def minhash_sig(col: str, dialect: str) -> list[str]:
-    """16 MinHash values over the distinct-token polyhashes."""
+def minhash_sig(ths: str, dialect: str) -> list[str]:
+    """16 MinHash values over a token-hash ARRAY expression (the oracle
+    passes ``token_hashes(text)``, the Spark plan a materialized column)."""
     out = []
     for a, b in MINHASH_PERMS:
-        permuted = lmap(token_hashes(col, dialect),
+        permuted = lmap(ths,
                         f"h -> ({a}L * (h % {MINHASH_PRIME}L) + {b}L) "
                         f"% {MINHASH_PRIME}L"
                         if dialect == SPARK else
@@ -174,14 +175,16 @@ def minhash_sig(col: str, dialect: str) -> list[str]:
     return out
 
 
-def band_keys(col: str, dialect: str) -> list[str]:
+def band_keys(ths: str, dialect: str) -> list[str]:
     """LSH band keys: combine each band's 4 minhashes into one bigint.
 
     Mixing uses mod-(2^31-1) polynomial accumulation — small enough that
     acc * 1000003 + minhash stays below 2^63 (ANSI overflow-safe), and
-    identical on both sides so collisions (if any) are shared.
+    identical on both sides so collisions (if any) are shared.  Every
+    key lies in [0, 2^31-1), so ``band_idx * MINHASH_PRIME + key`` is an
+    injective one-column band identity.
     """
-    sig = minhash_sig(col, dialect)
+    sig = minhash_sig(ths, dialect)
     rows = len(sig) // LSH_BANDS
     keys = []
     m = (1 << 31) - 1
@@ -193,6 +196,20 @@ def band_keys(col: str, dialect: str) -> list[str]:
                     f"+ ({h})) % {m}{'L' if dialect == SPARK else ''}")
         keys.append(expr)
     return keys
+
+
+def first_band_owner(n_bands: int, key_expr) -> str:
+    """Conjunct restricting a banded self-join to first-colliding-band
+    emission: a pair row is suppressed when any EARLIER band j also
+    collides, so every pair is emitted exactly once with no global
+    DISTINCT.  ``key_expr(side, j)`` renders band j's key for join side
+    'a'/'b' (a scalar column or a recomputable expression).  Shared by
+    the minhash and simhash candidate stages; single-band configs
+    degenerate to 'true'."""
+    return " and ".join(
+        [f"not (a.band_idx > {j} "
+         f"and {key_expr('a', j)} = {key_expr('b', j)})"
+         for j in range(n_bands - 1)] or ["true"])
 
 
 SIMHASH60_BANDS = 4     # 4 bands x 15 bits; exact for hamming <= 3

@@ -30,6 +30,10 @@ from pyspark.sql import types as T
 
 from ..geometry import point_to_polyline_dist
 
+# composite probe-cell key cx * CELL_MULT + cy: injective while cell
+# coordinates stay within +-CELL_MULT/2
+CELL_MULT = 100000
+
 
 def ring_offsets(max_ring: int) -> list[tuple[int, int, int]]:
     """(ring, dx, dy) for square rings 0..max_ring (grid_disk analog)."""
@@ -43,13 +47,13 @@ def ring_offsets(max_ring: int) -> list[tuple[int, int, int]]:
 
 
 def _knn_probe(points: DataFrame, way_cells: DataFrame, k: int = 3,
-               max_ring: int = 2, cell_mult: int = 100000) -> DataFrame:
+               max_ring: int = 2) -> DataFrame:
     """Single bounded-disk probe: points(pt_id, x, y, cx, cy ints) x
     way_cells(road_id, cellx, celly, road_geom) -> k nearest per point
     AMONG the candidates registered within Chebyshev ring <= max_ring.
 
     `cx`/`cy` are integer cell coordinates; the composite join key is
-    cx*cell_mult+cy.  Exact distance refine runs vectorized per Arrow batch.
+    cx*CELL_MULT+cy.  Exact distance refine runs vectorized per Arrow batch.
 
     `pt_id`/`road_id` keep their INPUT types (string or integral) end to
     end: at web scale the candidate relation is points x disk-local ways,
@@ -69,11 +73,11 @@ def _knn_probe(points: DataFrame, way_cells: DataFrame, k: int = 3,
               .selectExpr("pt_id", "x", "y", "cx", "cy",
                           f"inline(array({offsets}))")
               .selectExpr("pt_id", "x", "y", "ring",
-                          f"(cx + dx) * {int(cell_mult)} + (cy + dy) "
+                          f"(cx + dx) * {CELL_MULT} + (cy + dy) "
                           "as probe_cell"))
 
     idx = way_cells.selectExpr(
-        "*", f"cast(cellx * {int(cell_mult)} + celly as bigint) as probe_cell")
+        "*", f"cast(cellx * {CELL_MULT} + celly as bigint) as probe_cell")
 
     cand = probes.join(idx.hint("shuffle_hash"), "probe_cell", "inner")
 
@@ -128,9 +132,7 @@ def _knn_probe(points: DataFrame, way_cells: DataFrame, k: int = 3,
 
 
 def knn_ways(points: DataFrame, way_cells: DataFrame, k: int = 3,
-             max_ring: int = 2, cell_mult: int = 100000,
-             cell_size: float | None = None,
-             verify: bool = True) -> DataFrame:
+             max_ring: int = 2, *, cell_size: float) -> DataFrame:
     """k nearest ways per point, with per-point exactness verification.
 
     A way at true Euclidean distance d from a point is registered in a
@@ -141,20 +143,14 @@ def knn_ways(points: DataFrame, way_cells: DataFrame, k: int = 3,
     floor(dk/cell_size) + 1 <= R — every way that could still beat the
     current k-th lies inside the already-probed disk.
 
-    With ``verify`` (the default, requires ``cell_size``), points failing
-    the proof are re-probed with the ring their own dk implies (doubling
-    when k candidates were not found at all), up to the data's own cell
-    extent — so an under-sized density heuristic for ``max_ring`` costs a
-    second small probe over the flagged subset, never exactness.  The
-    driver's role per round is one tiny aggregate (flag count + needed
-    ring): O(log(extent/cell)) rounds, O(1) driver data each.
-
-    Without ``cell_size`` the single bounded-disk probe is returned
-    unverified (callers that only need disk-local semantics).
+    Points failing the proof are re-probed with the ring their own dk
+    implies (doubling when k candidates were not found at all), up to the
+    data's own cell extent — so an under-sized density heuristic for
+    ``max_ring`` costs a second small probe over the flagged subset, never
+    exactness.  The driver's role per round is one tiny aggregate (flag
+    count + needed ring): O(log(extent/cell)) rounds, O(1) driver data
+    each.
     """
-    base = _knn_probe(points, way_cells, k, max_ring, cell_mult)
-    if not verify or cell_size is None:
-        return base
 
     ring_cap_cache: list[int | None] = []
 
@@ -189,7 +185,7 @@ def knn_ways(points: DataFrame, way_cells: DataFrame, k: int = 3,
     dk_ring = f"floor((dk + {eps!r}D) / {float(cell_size)!r}D) + 1"
     resolved = []
     cur_ring = max_ring
-    cur = base.persist()
+    cur = _knn_probe(points, way_cells, k, max_ring).persist()
     cur_points = points
     while True:
         stats = cur.groupBy("pt_id").agg(
@@ -221,8 +217,7 @@ def knn_ways(points: DataFrame, way_cells: DataFrame, k: int = 3,
         need = int(agg["need"]) if agg["need"] is not None else 0
         new_ring = min(cap, max(need, cur_ring * 2))
         cur_points = points.join(bad.select("pt_id"), "pt_id", "inner")
-        cur = _knn_probe(cur_points, way_cells, k, new_ring,
-                         cell_mult).persist()
+        cur = _knn_probe(cur_points, way_cells, k, new_ring).persist()
         cur_ring = new_ring
 
     out = resolved[0]

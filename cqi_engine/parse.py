@@ -26,11 +26,6 @@ for _i, _v in enumerate(SURFACE_QUALITY_ORDER):
     _SURFACE_RANK.setdefault(_v, _i)
 
 
-def obj(s: pd.Series) -> pd.Series:
-    """Normalize a tag Series to object dtype with None for missing."""
-    return s.astype(object).where(pd.notna(s), None)
-
-
 # object-dtype falsiness (None / NaN / '' / 0 / False): three C-level
 # passes (pd.isna + two object-equality comparisons) measure ~2.7x faster
 # than one np.frompyfunc pass, because frompyfunc pays a Python frame per

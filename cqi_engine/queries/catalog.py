@@ -689,12 +689,12 @@ _sql_pair("dedup_exact", ("documents",), _dedup_exact,
           "Exact dedup via content-key hash groupBy")
 
 
-def _minhash_bands(d: str, src: str = "documents") -> str:
+def _minhash_bands(d: str) -> str:
     """Per-doc LSH band rows: (doc_id, band_idx, band_key)."""
-    keys = D.band_keys("text", d)
+    keys = D.band_keys(D.token_hashes("text", d), d)
     selects = [
         f"select doc_id, {i} as band_idx, cast({k} as bigint) as band_key "
-        f"from {src}" for i, k in enumerate(keys)]
+        f"from documents" for i, k in enumerate(keys)]
     return " union all ".join(selects)
 
 
@@ -732,223 +732,30 @@ where {jac} >= {D.MINHASH_JACCARD}
 """
 
 
-def _first_band_owner(n_bands: int, key_expr) -> str:
-    """SQL conjunct restricting a banded self-join to first-colliding-band
-    emission: a pair row is suppressed when any EARLIER band j also
-    collides, so every pair is emitted exactly once with no global
-    DISTINCT.  ``key_expr(side, j)`` renders band j's key for join side
-    'a'/'b' (a scalar column or a recomputable expression).  Shared by
-    the minhash and simhash candidate stages; single-band configs
-    degenerate to 'true'."""
-    return " and ".join(
-        [f"not (a.band_idx > {j} "
-         f"and {key_expr('a', j)} = {key_expr('b', j)})"
-         for j in range(n_bands - 1)] or ["true"])
-
-
-def _minhash_spark_staged() -> str:
-    """Spark-side plan: tokenize ONCE per doc in a CTE (distinct-token
-    array + its polyhash array materialized), then derive the 16 minhashes
-    and 4 band keys from the hash array, and evaluate the exact-Jaccard
-    verify against the PRE-TOKENIZED arrays — the naive dual-dialect
-    template re-tokenizes per permutation, per band, and twice per
-    candidate pair (the pair-side re-tokenization alone is ~2x the query
-    on a duplicate-heavy corpus).  The DuckDB oracle keeps the naive form;
-    the arithmetic is identical so results match exactly."""
-    d = SPARK
-    toks = D.tokens_distinct("text", d)
-    ths = D.lmap("toks", f"t -> {D.polyhash('t', d)}", d)
-    m = D.MINHASH_PRIME
-    sig_cols = ", ".join(
-        f"array_min(transform(ths, h -> ({a}L * (h % {m}L) + {b}L) % {m}L)) "
-        f"as s{j}"
-        for j, (a, b) in enumerate(D.MINHASH_PERMS))
-    rows = len(D.MINHASH_PERMS) // D.LSH_BANDS
-    mixm = (1 << 31) - 1
-    band_selects = []
-    for band in range(D.LSH_BANDS):
-        expr = "0"
-        for r in range(rows):
-            expr = f"((({expr}) * 1000003L + s{band * rows + r}) % {mixm}L)"
-        band_selects.append(
-            f"select doc_id, {band} as band_idx, cast({expr} as bigint) as band_key from sigs")
-    bands = " union all ".join(band_selects)
-    inter = "size(array_intersect(da.toks, db.toks))"
-    union = "size(array_union(da.toks, db.toks))"
-    jac = f"(cast({inter} as double) / {union})"
-    return f"""
-with th as (select doc_id, {toks} as toks from documents),
-sigs as (select doc_id, {sig_cols} from (select doc_id, {ths} as ths from th) x),
-bands as ({bands}),
-cand as (
-  select distinct a.doc_id as doc_a, b.doc_id as doc_b
-  from bands a join bands b
-    on a.band_idx = b.band_idx and a.band_key = b.band_key
-   and a.doc_id < b.doc_id
-)
-select c.doc_a, c.doc_b,
-       cast(round({jac}, 6) as double) as jaccard
-from cand c
-join th da on da.doc_id = c.doc_a
-join th db on db.doc_id = c.doc_b
-where {jac} >= {D.MINHASH_JACCARD}
-"""
-
-
 def _dedup_minhash_fn(spark, sf_dir: str):
-    """Materialized-stage variant of the staged plan: Spark inlines CTEs,
-    so the pure-SQL form re-tokenizes the corpus once per reference (the
-    bands CTE alone re-scans `sigs` four times).  Persisting the token and
-    band stages and exploding all four band keys in ONE pass over the
-    signatures keeps every stage single-scan; the SQL arithmetic is the
-    shared template's, so the oracle still matches bit-for-bit.
-
-    Candidate generation (round 4): ~30M band-collision rows collapse to
-    7.54M unique pairs (the corpus is 7% near-duplicate) WITHOUT a global
-    DISTINCT — each band row carries the doc's full band-key signature
-    and a pair is emitted only by its first colliding band, so uniqueness
-    is decided locally in the bucket and the 30M-row dedup exchange is
-    gone from the plan (at 100 TB that exchange is bands x
-    true-pair-count rows of shuffle).  A size-ratio prefilter (cut 3
-    below) then drops the 61% of candidates that provably cannot pass
-    the verify: benched wall 13.4 -> 9.6 s at sf0.1."""
-    d = SPARK
-    docs = read_table(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("documents")
-
-    toks = D.tokens_distinct("text", d)
-    toks_df = spark.sql(
-        f"select doc_id, {toks} as toks from documents").persist()
-    toks_df.createOrReplaceTempView("mh_toks")
-
-    ths = D.lmap("toks", f"t -> {D.polyhash('t', d)}", d)
-    m = D.MINHASH_PRIME
-    sig_cols = ", ".join(
-        f"array_min(transform(ths, h -> ({a}L * (h % {m}L) + {b}L) % {m}L)) "
-        f"as s{j}"
-        for j, (a, b) in enumerate(D.MINHASH_PERMS))
-    rows = len(D.MINHASH_PERMS) // D.LSH_BANDS
-    mixm = (1 << 31) - 1
-    key_exprs = []
-    for band in range(D.LSH_BANDS):
-        expr = "0"
-        for r in range(rows):
-            expr = f"((({expr}) * 1000003L + s{band * rows + r}) % {mixm}L)"
-        key_exprs.append(f"cast({expr} as bigint) as k{band}")
-    k_cols = ", ".join(f"k{b}" for b in range(D.LSH_BANDS))
-    band_structs = ", ".join(
-        f"named_struct('band_idx', {b}, 'band_key', k{b})"
-        for b in range(D.LSH_BANDS))
-    bands_df = spark.sql(f"""
-        select doc_id, nt, b.band_idx, b.band_key, {k_cols}
-        from (select doc_id, nt, {', '.join(key_exprs)}
-              from (select doc_id, nt, {sig_cols}
-                    from (select doc_id, size(toks) as nt, {ths} as ths
-                          from mh_toks) x)) sigs
-        lateral view explode(array({band_structs})) t as b
-    """).persist()
-    bands_df.createOrReplaceTempView("mh_bands")
-
-    # Candidate-stage diet (round 4), two independent cuts, measured at
-    # sf0.1/local[32]:
-    #
-    # 1. SINGLETON-BAND PRUNING: a (band_idx, band_key) bucket of size 1
-    #    can produce no pair; the semi-join against the non-singleton
-    #    bucket list (one map-side-combinable count; unhinted, so AQE
-    #    broadcasts it while small) shrinks the self-join input to the
-    #    colliding minority.  On a mostly-unique web corpus that is the
-    #    bulk of all band rows; on THIS template-heavy synthetic corpus it
-    #    prunes only ~1.4% (19,723 of 20,000 band rows collide) — kept
-    #    because the real-corpus case is the one that matters at scale.
-    # 2. FIRST-COLLIDING-BAND EMISSION instead of a global DISTINCT: the
-    #    former plan generated ~4 collision rows per true near-dup pair
-    #    (near-dups collide in every band) and paid one full shuffle +
-    #    hash dedup of ~30M rows to collapse them (~10.6 s, the dominant
-    #    stage).  Each band row now carries the doc's full 4-key signature
-    #    as SCALAR columns k0..k3 (32 B; scalars, not an array — Spark
-    #    evaluates higher-order array functions interpreted, and a
-    #    zip_with-based prefix check measured 115 s vs 6-7 s for the
-    #    whole-stage-codegen'd scalar conjuncts), so a bucket decides
-    #    LOCALLY whether an earlier band already emitted the pair — every
-    #    pair is emitted exactly once, by construction, and the 30M-row
-    #    dedup exchange disappears from the plan entirely.
-    # (Also measured, kept OUT: skew.py-style salting of the bucket
-    # self-join — probe side salted by doc hash, build side replicated
-    # per salt, splitting a hot bucket's k^2/2-pair generation across
-    # salt_k reducers.  Row-identical, but 13.5 s vs 12.1 s here: at this
-    # scale generation is already spread across enough buckets that the
-    # build-side replication costs more than the split buys.  The hint
-    # stays documented because a single mega-cluster corpus would need it.)
-    spark.sql("""
-        select band_idx, band_key from mh_bands
-        group by band_idx, band_key having count(*) >= 2
-    """).createOrReplaceTempView("mh_hot_bands")
-    pruned_df = spark.sql(f"""
-        select b.doc_id, b.nt, b.band_idx, b.band_key, {k_cols}
-        from mh_bands b join mh_hot_bands h
-          on b.band_idx = h.band_idx and b.band_key = h.band_key
-    """).persist()  # both sides of the self-join read it; without the
-    #                 persist the count agg + semi-join would run twice
-    pruned_df.createOrReplaceTempView("mh_pruned")
-
-    first_band_owner = _first_band_owner(
-        D.LSH_BANDS, lambda s, j: f"{s}.k{j}")
-    # |A∪B| = |A| + |B| - |A∩B| for DISTINCT token sets, so the verify
-    # materializes no union array: one array_intersect per pair (computed
-    # once in the `scored` subquery, not re-evaluated in both filter and
-    # project) and integer arithmetic on the nt counts the pair rows
-    # already carry.  The double division is the SAME rational as the
-    # oracle's inter/size(union), so the boundary compare and the
-    # round(..., 6) are bit-identical.
-    jac = "(cast(inter as double) / (nt_a + nt_b - inter))"
-    # REBALANCE: the bucket self-join's output inherits the (heavily
-    # skewed) band-bucket layout, and the verify joins broadcast the small
-    # token table, so WITHOUT an exchange the jaccard arithmetic — the
-    # CPU-heavy part — would run on whatever few partitions hold the hot
-    # template buckets (measured 60 s vs 6-7 s).  One AQE rebalance of the
-    # narrow 16-byte pair rows restores even parallelism at a fraction of
-    # the old 30M-row dedup exchange's cost.
-    # 3. SIZE-RATIO PREFILTER (round 4, second pass): jac >= t implies
-    #    |A∩B|/|A∪B| <= min(|A|,|B|)/max(|A|,|B|), so a pair with
-    #    DEN*min(nt) < NUM*max(nt) provably fails the verify — a
-    #    3-instruction integer test on counts the band rows already carry
-    #    (nt threaded through sigs, +8 B/row) kills it INSIDE the bucket
-    #    self-join, before the REBALANCE exchange and before either
-    #    token-array fetch.  Threshold and ratio both derive from
-    #    D.MINHASH_JACCARD_NUM/DEN so they cannot drift apart.  On this
-    #    corpus it removes 61.4% of the 7.54M candidates (measured);
-    #    lossless by construction, so the naive DuckDB oracle still
-    #    matches bit-for-bit.
-    return spark.sql(f"""
-        with cand as (
-          select /*+ REBALANCE */ a.doc_id as doc_a, b.doc_id as doc_b,
-                 a.nt as nt_a, b.nt as nt_b
-          from mh_pruned a join mh_pruned b
-            on a.band_idx = b.band_idx and a.band_key = b.band_key
-           and a.doc_id < b.doc_id
-           and least(a.nt, b.nt) * {D.MINHASH_JACCARD_DEN} >= greatest(a.nt, b.nt) * {D.MINHASH_JACCARD_NUM}
-          where {first_band_owner}
-        ),
-        scored as (
-          select c.doc_a, c.doc_b, c.nt_a, c.nt_b,
-                 size(array_intersect(da.toks, db.toks)) as inter
-          from cand c
-          join mh_toks da on da.doc_id = c.doc_a
-          join mh_toks db on db.doc_id = c.doc_b
-        )
-        select doc_a, doc_b,
-               cast(round({jac}, 6) as double) as jaccard
-        from scored
-        where {jac} >= {D.MINHASH_JACCARD}
-    """)
+    """The Spark plan is the incremental index's pair stage
+    (``streaming/dedup.py``) over the whole corpus: tokenize once,
+    minhash and band from the token-hash array (the oracle template's
+    arithmetic, ``dialect.band_keys``), one self-join on the fused band
+    key with the size-ratio prefilter and first-colliding-band emission
+    inside it (each pair emitted once, no global DISTINCT), then the
+    exact-Jaccard verify against the tokenized arrays.  The token and
+    band stages are persisted: the self-join reads the bands twice and
+    the verify the tokens twice.  (Measured and left out: salting the
+    band self-join, skew.py-style, row-identical but 13.5 s vs 12.1 s at
+    sf0.1; a single mega-cluster corpus would need it.)"""
+    from ..streaming.dedup import band_frames, self_pairs
+    toks, bands = band_frames(spark.table("documents"))
+    return (self_pairs(toks.persist(), bands.persist())
+            .selectExpr("seen_id as doc_a", "doc_id as doc_b", "jaccard"))
 
 
 _reg(Query("dedup_minhash_lsh", ("documents",),
            fn=_dedup_minhash_fn,
-           spark_sql=_minhash_spark_staged(),
            duck_sql=_dedup_minhash_lsh(DUCK),
            doc="MinHash+LSH banded near-dup join with exact-Jaccard verify "
-               "(persisted single-scan stages on the Spark side)"))
+               "(the incremental index's pair stage, persisted single-scan "
+               "stages)"))
 
 
 def _simhash_sims(d: str) -> str:
@@ -1007,7 +814,7 @@ def _dedup_simhash_pairs_fn(spark, sf_dir: str):
         from sh_sims lateral view explode(array({band_structs})) t as b
     """).createOrReplaceTempView("sh_bands")
 
-    first_band_owner = _first_band_owner(
+    first_band_owner = D.first_band_owner(
         D.SIMHASH60_BANDS, lambda s, j: band_j(f"{s}.h60", j))
     return spark.sql(f"""
         select a.doc_id as doc_a, b.doc_id as doc_b,
@@ -1110,7 +917,7 @@ def _ngram_jaccard_fn(spark, sf_dir: str):
 
 
 _reg(Query("ngram_jaccard", ("documents",),
-           fn=_ngram_jaccard_fn, spark_sql=_ngram_jaccard(SPARK),
+           fn=_ngram_jaccard_fn,
            duck_sql=_ngram_jaccard(DUCK),
            doc="Word-bigram shingle Jaccard near-dup: incidence-GEMM scale "
                "plan (explode/equi-join fallback + oracle)"))
@@ -1334,7 +1141,6 @@ def _embed_neardup_lsh_fn(spark, sf_dir: str):
 
 _reg(Query("embed_neardup_lsh", ("embeddings",),
            fn=_embed_neardup_lsh_fn,
-           spark_sql=_embed_neardup_lsh(SPARK),
            duck_sql=_embed_neardup_lsh(DUCK),
            doc="Sub-quadratic LSH-table near-dup: banded hyperplane "
                "buckets (one persisted order-exact Arrow pass) -> "
@@ -1814,8 +1620,7 @@ def _components_fn(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     from ..operators.components import connected_components
-    pairs = spark.sql(CATALOG["dedup_minhash_lsh"].spark_sql) \
-        .select("doc_a", "doc_b")
+    pairs = _dedup_minhash_fn(spark, sf_dir).select("doc_a", "doc_b")
     return (connected_components(pairs, "doc_a", "doc_b")
             .select(F.col("node").cast("long").alias("node"),
                     F.col("component").cast("long").alias("component")))
@@ -1843,7 +1648,8 @@ from reach group by n
 _reg(Query("dedup_components", ("documents",), fn=_components_fn,
            duck_sql=_components_duck(),
            doc="Near-dup clustering: iterative connected components over "
-               "the LSH pair graph vs a recursive-CTE closure oracle"))
+               "dedup_minhash_lsh's pair graph vs a recursive-CTE closure "
+               "oracle"))
 
 
 def _pricing_rollup(d: str) -> str:

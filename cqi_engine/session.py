@@ -8,9 +8,9 @@ from pyspark.sql import SparkSession
 
 
 # Runtime confs the engine relies on, listed once: build_session passes them
-# to the builder and tune_runtime sets them on a session handed in from
-# outside (200 shuffle partitions, no AQE tuning).  Every key is settable on
-# a live session.
+# to the builder and tune_runtime sets them, once, on a session handed in
+# from outside (200 shuffle partitions, no AQE tuning).  Every key is
+# settable on a live session.
 RUNTIME_CONF = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.shuffle.partitions": "32",
@@ -64,10 +64,17 @@ def build_session(app_name: str = "cqi-engine", master: str | None = None,
                 os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.ui.port", "0")
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    _TUNED_SESSIONS.add(spark.sparkContext.applicationId)
+    return spark
 
 
+# applicationIds of the sessions already shipped / already tuned: keyed by
+# applicationId, not id(spark), because CPython recycles object addresses,
+# so a stopped session's id can be reused by a fresh one whose new
+# SparkContext still needs both
 _SHIPPED_SESSIONS: set[str] = set()
+_TUNED_SESSIONS: set[str] = set()
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -78,9 +85,6 @@ def ship_package(spark: SparkSession) -> None:
     harness may import ``__spark_entry__`` from anywhere).  Zip the package
     and register it via ``addPyFile`` — idempotent per session.
     """
-    # applicationId, not id(spark): CPython recycles object addresses, so
-    # a stopped session's id can be reused by a fresh one and the early
-    # return would silently skip addPyFile on its new SparkContext
     key = spark.sparkContext.applicationId
     if key in _SHIPPED_SESSIONS:
         return
@@ -104,7 +108,13 @@ def ship_package(spark: SparkSession) -> None:
 
 
 def tune_runtime(spark: SparkSession) -> None:
-    """Apply RUNTIME_CONF to whatever session executes the engine's queries,
-    so plans match on both session paths."""
+    """Apply RUNTIME_CONF once to a session handed in from outside, so
+    plans match on both session paths.  A session from build_session has
+    it already, and a conf its owner sets afterwards (say, the shuffle
+    partition count) is left alone by every later engine call."""
+    key = spark.sparkContext.applicationId
+    if key in _TUNED_SESSIONS:
+        return
     for k, v in RUNTIME_CONF.items():
         spark.conf.set(k, v)
+    _TUNED_SESSIONS.add(key)

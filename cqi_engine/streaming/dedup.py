@@ -20,13 +20,15 @@ is monotone batches (ids assigned at arrival — the streaming case); a
 non-monotone feed degrades gracefully: an already-committed larger-id
 document is never retroactively dropped.
 
-The MinHash/band/Jaccard arithmetic is expression-for-expression the
-catalog's (`queries/catalog.py` ``dedup_minhash_lsh``), sharing the
-constants in ``operators/dialect.py`` — an incremental run over N batches
-and the corpus-at-once query agree exactly on which pairs verify.  The
-band key here is the catalog's (band_idx, band_key) pair FUSED into one
-bigint (``bk = band_idx * P + band_key``, injective) so the index can be
-bucketed on a single column and the band join co-locates on it.
+The MinHash signature and band keys are ``operators/dialect.py``'s
+``minhash_sig``/``band_keys``, the DuckDB oracle's own template, and the
+pair stage here (``band_frames`` -> ``candidates`` -> ``verify_self``) IS
+the catalog's ``dedup_minhash_lsh`` and ``dedup_components`` Spark plan:
+one code path, not copies kept in step, so an incremental run over N
+batches and the corpus-at-once query agree on which pairs verify.  The
+band identity is (band_idx, band_key) FUSED into one bigint
+(``bk = band_idx * P + band_key``, injective because band_key < P), so the
+index can be bucketed on a single column and the band join co-locates on it.
 
 Index layout under ``index_dir`` — the sandbox stand-in for one Iceberg
 table with snapshot commits, now with Iceberg's two load-bearing
@@ -80,7 +82,6 @@ from pyspark.sql import functions as F
 from ..operators import dialect as D
 from ..ops.bucketing import write_bucketed
 
-_MIXM = (1 << 31) - 1
 # bucket count for NEW persisted indexes.  Caps the no-exchange band and
 # verify joins' task count (buckets cannot be split), so it tracks the
 # deployment's core count, hence a deployment env knob; at 100 TB
@@ -94,34 +95,6 @@ N_BUCKETS = int(os.environ.get("SPARK_GRAFT_INDEX_BUCKETS", "32"))
 class IndexLayoutError(ValueError):
     """The persisted index is in a layout this module cannot read safely
     (an older format, or a missing or damaged sidecar)."""
-
-
-def _sig_cols() -> list:
-    m = D.MINHASH_PRIME
-    return [
-        f"array_min(transform(ths, h -> ({a}L * (h % {m}L) + {b}L) % {m}L)) "
-        f"as s{j}"
-        for j, (a, b) in enumerate(D.MINHASH_PERMS)]
-
-
-def _key_exprs() -> list:
-    rows = len(D.MINHASH_PERMS) // D.LSH_BANDS
-    out = []
-    for band in range(D.LSH_BANDS):
-        expr = "0"
-        for r in range(rows):
-            expr = f"((({expr}) * 1000003L + s{band * rows + r}) % {_MIXM}L)"
-        out.append(f"cast({expr} as bigint) as k{band}")
-    return out
-
-
-def _first_band_owner(n_bands: int) -> str:
-    """First-colliding-band emission conjunct (the catalog's candidate
-    dedup-without-DISTINCT trick): suppress a pair row when any earlier
-    band also collides, so each (a, b) pair surfaces exactly once."""
-    return " and ".join(
-        [f"not (a.band_idx > {j} and a.k{j} = b.k{j})"
-         for j in range(n_bands - 1)] or ["true"])
 
 
 def band_frames(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -144,16 +117,95 @@ def band_frames(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     k_cols = [f"k{b}" for b in range(D.LSH_BANDS)]
     band_structs = ", ".join(
         f"named_struct('band_idx', {b}, "
-        f"'bk', cast({b}L * {_MIXM}L + k{b} as bigint))"
+        f"'bk', cast({b}L * {D.MINHASH_PRIME}L + k{b} as bigint))"
         for b in range(D.LSH_BANDS))
     bands_df = (toks_df
                 .selectExpr("doc_id", "size(toks) as nt", f"{ths} as ths")
-                .selectExpr("doc_id", "nt", *_sig_cols())
-                .selectExpr("doc_id", "nt", *_key_exprs())
+                .selectExpr("doc_id", "nt", *(
+                    f"cast({k} as bigint) as k{b}"
+                    for b, k in enumerate(D.band_keys("ths", d))))
                 .selectExpr("doc_id", "nt", *k_cols,
                             f"explode(array({band_structs})) as b")
                 .selectExpr("doc_id", "nt", "b.band_idx", "b.bk", *k_cols))
     return toks_df, bands_df
+
+
+# the band join's condition: a shared fused band key, the seen side's id
+# strictly smaller, the size-ratio prefilter (jac >= NUM/DEN implies
+# DEN*min(|A|,|B|) >= NUM*max(|A|,|B|), so it drops only pairs that cannot
+# verify) and first-colliding-band emission, all inside the join
+_CANDIDATE_COND = (
+    "a.bk = b.bk and b.doc_id < a.doc_id"
+    f" and least(a.nt, b.nt) * {D.MINHASH_JACCARD_DEN}"
+    f" >= greatest(a.nt, b.nt) * {D.MINHASH_JACCARD_NUM}"
+    f" and {D.first_band_owner(D.LSH_BANDS, lambda s, j: f'{s}.k{j}')}")
+
+
+def candidates(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Band-collision candidate pairs (doc_id, seen_id, nt_a, nt_b) of
+    band frames a and b, seen id strictly smaller: for a self-join that
+    is plain a<b pairing, and against the index the same predicate means
+    a non-monotone feed never drops a doc for a LARGER already-committed
+    neighbor.  The shuffle_hash hint pins ``a`` as the build side, which
+    also keeps the planner from broadcasting an unbounded index ``b``."""
+    return (a.alias("a").hint("shuffle_hash")
+            .join(b.alias("b"), F.expr(_CANDIDATE_COND))
+            .selectExpr("a.doc_id as doc_id", "b.doc_id as seen_id",
+                        "a.nt as nt_a", "b.nt as nt_b"))
+
+
+def _score(paired: DataFrame) -> DataFrame:
+    """Exact Jaccard of paired token arrays, kept at >= MINHASH_JACCARD.
+    |A u B| = |A| + |B| - |A n B| for distinct token sets, so no union
+    array is built: the same rational as the oracle's inter/size(union),
+    hence the same boundary compare and round(..., 6)."""
+    inter = "size(array_intersect(ta_toks, tb_toks))"
+    jac = "(cast(inter as double) / (nt_a + nt_b - inter))"
+    return (paired
+            .selectExpr("doc_id", "seen_id", "nt_a", "nt_b",
+                        f"{inter} as inter")
+            .where(F.expr(f"{jac} >= {D.MINHASH_JACCARD}"))
+            .selectExpr("doc_id", "seen_id",
+                        f"cast(round({jac}, 6) as double) as jaccard"))
+
+
+def verify_self(cand: DataFrame, toks: DataFrame) -> DataFrame:
+    """Verify pairs whose both sides are in ``toks``: rebalance the
+    NARROW pair rows off the skewed band-bucket layout they inherit (hot
+    template buckets; Jaccard arithmetic left on it measured 60 s vs
+    6-7 s), then fetch both arrays from ``toks``."""
+    paired = (cand.hint("rebalance").alias("c")
+              .join(toks.alias("ta"), F.expr("ta.doc_id = c.doc_id"))
+              .join(toks.alias("tb"), F.expr("tb.doc_id = c.seen_id"))
+              .selectExpr("c.doc_id", "c.seen_id", "c.nt_a", "c.nt_b",
+                          "ta.toks as ta_toks", "tb.toks as tb_toks"))
+    return _score(paired)
+
+
+def self_pairs(toks: DataFrame, bands: DataFrame) -> DataFrame:
+    """Every verified near-dup pair inside one ``band_frames`` output:
+    (doc_id, seen_id, jaccard) with seen_id < doc_id, each pair once.
+    The catalog's corpus-at-once ``dedup_minhash_lsh`` is this relation;
+    an incremental batch annotates against it and the index."""
+    return verify_self(candidates(bands, bands), toks)
+
+
+def verify_index(cand: DataFrame, toks: DataFrame,
+                 seen_toks: DataFrame) -> DataFrame:
+    """Verify batch-vs-seen pairs: the seen arrays come off the bucketed
+    toks/ scan exchange-free (only the narrow candidate rows shuffle,
+    into the bucket layout, which is seen_id-hash-distributed, NOT the
+    skewed band layout, so no rebalance is needed or wanted: it would
+    move the fetched token arrays), then the batch arrays join on top."""
+    paired = (cand.alias("c").hint("shuffle_hash")
+              .join(seen_toks.alias("tb"), F.expr("tb.doc_id = c.seen_id"))
+              .selectExpr("c.doc_id", "c.seen_id", "c.nt_a", "c.nt_b",
+                          "tb.toks as tb_toks")
+              .alias("w")
+              .join(toks.alias("ta"), F.expr("ta.doc_id = w.doc_id"))
+              .selectExpr("w.doc_id", "w.seen_id", "w.nt_a", "w.nt_b",
+                          "w.tb_toks", "ta.toks as ta_toks"))
+    return _score(paired)
 
 
 def _manifest_path(index_dir: str) -> str:
@@ -338,82 +390,15 @@ def _annotate(toks_new: DataFrame, bands_new: DataFrame,
     every batch doc with a verified smaller-id neighbor.  Kept separate
     from the driver so the plan audit can explain() it pre-checkpoint.
 
-    Join shape at scale: band collisions are ONE equi-join per source on
-    the fused ``bk`` — the batch self-join shuffles only batch rows, and
-    the index join streams the bucketed index scan with NO Exchange (the
-    shuffle_hash hint pins the batch side as build, which also forbids the
-    planner from broadcasting the unbounded index when a small-SF size
-    estimate would otherwise tempt it).  The size-ratio prefilter +
-    first-band-owner conjunct run inside the band joins exactly as in the
-    graded corpus-at-once query.  Verify fetches token arrays for
-    candidate ids only: batch-mate candidates against the in-memory batch
-    toks, index candidates against the bucketed ``toks/`` scan (again
-    exchange-free on the index side), then the Jaccard arithmetic runs on
-    REBALANCE-spread partitions — the band-bucket layout the collision
-    rows inherit is skewed (hot template buckets), and the catalog
-    measured 60 s vs 6-7 s for arithmetic left on it."""
-    num, den = D.MINHASH_JACCARD_NUM, D.MINHASH_JACCARD_DEN
-    owner = _first_band_owner(D.LSH_BANDS)
-    ratio = (f"least(a.nt, b.nt) * {den} >= greatest(a.nt, b.nt) * {num}")
-    cond = (f"a.bk = b.bk and b.doc_id < a.doc_id and {ratio} and {owner}")
-
-    def candidates(a: DataFrame, b: DataFrame) -> DataFrame:
-        """Band-collision candidate pairs a->(doc, seen), seen id strictly
-        smaller — for the batch self-join that is plain a<b pairing, and
-        for the index side the same predicate means a non-monotone feed
-        never drops a doc for a LARGER already-committed neighbor."""
-        return (a.alias("a").hint("shuffle_hash")
-                .join(b.alias("b"), F.expr(cond))
-                .selectExpr("a.doc_id as doc_id", "b.doc_id as seen_id",
-                            "a.nt as nt_a", "b.nt as nt_b"))
-
-    inter = "size(array_intersect(ta_toks, tb_toks))"
-    jac = f"(cast(inter as double) / (nt_a + nt_b - inter))"
-
-    def score(paired: DataFrame) -> DataFrame:
-        return (paired
-                .selectExpr("doc_id", "seen_id", "nt_a", "nt_b",
-                            f"{inter} as inter")
-                .where(F.expr(f"{jac} >= {D.MINHASH_JACCARD}"))
-                .selectExpr("doc_id", "seen_id",
-                            f"cast(round({jac}, 6) as double) as jaccard"))
-
-    def verify_self(cand: DataFrame) -> DataFrame:
-        """Batch-mate pairs: rebalance the NARROW pair rows off the
-        skewed band-bucket layout, then fetch both arrays from the
-        in-memory batch toks (broadcastable — batch-bounded)."""
-        paired = (cand.hint("rebalance").alias("c")
-                  .join(toks_new.alias("ta"),
-                        F.expr("ta.doc_id = c.doc_id"))
-                  .join(toks_new.alias("tb"),
-                        F.expr("tb.doc_id = c.seen_id"))
-                  .selectExpr("c.doc_id", "c.seen_id", "c.nt_a", "c.nt_b",
-                              "ta.toks as ta_toks", "tb.toks as tb_toks"))
-        return score(paired)
-
-    def verify_index(cand: DataFrame) -> DataFrame:
-        """Batch-vs-seen pairs: the seen arrays come off the bucketed
-        toks/ scan exchange-free (only the narrow candidate rows shuffle,
-        into the bucket layout — which is seen_id-hash-distributed, NOT
-        the skewed band layout, so no extra rebalance is needed or
-        wanted: it would move the fetched token arrays), then the batch
-        arrays join broadcast-style on top."""
-        paired = (cand.alias("c").hint("shuffle_hash")
-                  .join(seen_toks.alias("tb"),
-                        F.expr("tb.doc_id = c.seen_id"))
-                  .selectExpr("c.doc_id", "c.seen_id", "c.nt_a", "c.nt_b",
-                              "tb.toks as tb_toks")
-                  .alias("w")
-                  .join(toks_new.alias("ta"),
-                        F.expr("ta.doc_id = w.doc_id"))
-                  .selectExpr("w.doc_id", "w.seen_id", "w.nt_a", "w.nt_b",
-                              "w.tb_toks", "ta.toks as ta_toks"))
-        return score(paired)
-
-    verified = verify_self(candidates(bands_new, bands_new))
+    Batch-mate pairs are ``self_pairs`` of the batch, the relation the
+    catalog's corpus-at-once query returns.  Batch-vs-seen pairs are one
+    band join on the fused ``bk`` against the bucketed index and
+    ``verify_index``; both stream the index scans with NO Exchange, only
+    batch-derived rows shuffle."""
+    verified = self_pairs(toks_new, bands_new)
     if seen_bands is not None:
-        verified = verified.unionByName(
-            verify_index(candidates(bands_new, seen_bands)))
+        verified = verified.unionByName(verify_index(
+            candidates(bands_new, seen_bands), toks_new, seen_toks))
 
     return (verified.groupBy("doc_id")
             .agg(F.min(F.struct("seen_id", "jaccard")).alias("m"))

@@ -34,6 +34,18 @@ def _n_jobs(spark, action):
     return out, len(jobs)
 
 
+def _catalog_corpus(tmp_path, n_customers: int, n_suppliers: int) -> str:
+    """The benchmark's catalog corpus (perfbench/gen.py, seed 31)."""
+    sys.path.insert(0, _PERFBENCH)
+    try:
+        import gen
+    finally:
+        sys.path.remove(_PERFBENCH)
+    d = str(tmp_path)
+    gen.write_catalog(d, gen.catalog_tables(31, n_customers, n_suppliers))
+    return d
+
+
 def test_read_table_infers_schema_once_per_file_version(spark, tmp_path):
     """The first read of a file infers its schema (a Spark job); a second
     read of the same file runs no job.  Rewriting the file at the same
@@ -94,13 +106,7 @@ def test_knn_blocked_stages_stay_coalesced(spark, tmp_path):
     here."""
     from cqi_engine.queries.catalog import CATALOG, run_query
 
-    sys.path.insert(0, _PERFBENCH)
-    try:
-        import gen
-    finally:
-        sys.path.remove(_PERFBENCH)
-    d = str(tmp_path)
-    gen.write_catalog(d, gen.catalog_tables(31, 6000, 400))
+    d = _catalog_corpus(tmp_path, 6000, 400)
     rows, jobs = _jobs(spark, lambda: run_query(
         spark, d, CATALOG["knn_blocked"]).collect())
     st = spark.sparkContext.statusTracker()
@@ -109,3 +115,22 @@ def test_knn_blocked_stages_stay_coalesced(spark, tmp_path):
     ran = [s.numTasks for s in stages if s and s.numCompletedTasks]
     assert len(rows) == 6000 * 5 and ran
     assert max(ran) <= 4, sorted(ran)
+
+
+def test_run_query_keeps_the_session_partition_count(spark, tmp_path):
+    """The engine configures a session once: a catalog query leaves the
+    shuffle partition count the session's owner chose, both the one
+    build_session was given and one set on the live session later."""
+    from cqi_engine.queries.catalog import CATALOG, run_query
+
+    d = _catalog_corpus(tmp_path, 200, 20)
+    key = "spark.sql.shuffle.partitions"
+    built = str(max(8, int(os.environ.get("CQI_TEST_CPUS", "4"))))
+    run_query(spark, d, CATALOG["cell_agg"]).collect()
+    assert spark.conf.get(key) == built
+    spark.conf.set(key, "7")
+    try:
+        run_query(spark, d, CATALOG["cell_agg"]).collect()
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, built)

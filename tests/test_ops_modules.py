@@ -1368,7 +1368,8 @@ def test_ship_package_keyed_by_application_id():
 def test_tune_runtime_matches_build_session_shuffle():
     """tune_runtime must set exactly the conf table build_session bakes in,
     shuffle partitions included, so plans reproduce identically whichever
-    path built the session."""
+    path built the session; it sets it once per session."""
+    from cqi_engine import session as sess_mod
     from cqi_engine.session import RUNTIME_CONF, tune_runtime
 
     class _Conf:
@@ -1378,14 +1379,24 @@ def test_tune_runtime_matches_build_session_shuffle():
         def set(self, k, v):
             self.vals[k] = v
 
+    class _Ctx:
+        applicationId = "app-test-tune"
+
     class _Spark:
         def __init__(self):
             self.conf = _Conf()
+            self.sparkContext = _Ctx()
 
     s = _Spark()
-    tune_runtime(s)
-    assert s.conf.vals == RUNTIME_CONF
-    assert s.conf.vals["spark.sql.shuffle.partitions"] == "32"
+    try:
+        tune_runtime(s)
+        assert s.conf.vals == RUNTIME_CONF
+        assert s.conf.vals["spark.sql.shuffle.partitions"] == "32"
+        s.conf.vals.clear()
+        tune_runtime(s)               # same app id: already tuned
+        assert s.conf.vals == {}
+    finally:
+        sess_mod._TUNED_SESSIONS.discard("app-test-tune")
 
 
 def test_score_job_snapshot_id_tracks_input_and_buckets(tmp_path):

@@ -77,6 +77,15 @@ def test_no_rows_only_queries_left():
     assert ROWS_ONLY_QUERIES == []
 
 
+def test_each_query_has_one_spark_plan():
+    """A catalog entry runs exactly one Spark plan: a builder function or
+    Spark SQL text, never both (run_query would run the function, and the
+    text would be a second, never-run plan that can drift)."""
+    both_or_none = sorted(n for n, q in CATALOG.items()
+                          if (q.fn is None) == (q.spark_sql is None))
+    assert both_or_none == []
+
+
 def test_flagship_fixture_fresh(duck):
     """The committed flagship fixture must equal a fresh run of the pandas
     reference path — the fixture cannot drift from the kernel silently."""
