@@ -144,7 +144,8 @@ def final_projection(scored: pd.DataFrame) -> pd.DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Signature-grouped evaluation: dictionary-encoded rule execution.
+# Signature-grouped evaluation: dictionary-encoded rule execution
+# (operators/pipeline.score_batches, Arrow-side).
 #
 # Every stage in _post_sidepath_stages is a pure function of the way's
 # attribute tuple — `id` is the only per-row passthrough in the distributed
@@ -160,33 +161,9 @@ _GROUP_MIN_ROWS = 256      # below this the bookkeeping costs more than it saves
 _GROUP_MIN_DUP = 4         # require >=4x row/signature duplication to engage
 
 
-def _signature_codes(df: pd.DataFrame,
-                     key_cols: list[str]) -> tuple[np.ndarray, np.ndarray]:
-    """Dense first-occurrence codes of the distinct key_cols row tuples.
-
-    Returns (codes (n,), first (k,)) where first[s] is the position of
-    signature s's first row.  Mixed-radix combination of per-column
-    factorize codes, recompressed before int64 overflow.
-    """
-    n = len(df)
-    sig = np.zeros(n, dtype=np.int64)
-    card = 1
-    for c in key_cols:
-        codes, uniq = pd.factorize(df[c], use_na_sentinel=True)
-        k = len(uniq) + 1
-        if card > (1 << 62) // max(k, 1):
-            sig = pd.factorize(sig)[0].astype(np.int64)
-            card = int(sig.max()) + 1 if n else 1
-        sig = sig * k + (codes.astype(np.int64) + 1)
-        card *= k
-    codes, _ = pd.factorize(sig)
-    first = np.unique(codes, return_index=True)[1]
-    return codes.astype(np.int64), first
-
-
 def grouped_scatter_plan(codes: np.ndarray, k: int, out_sig: np.ndarray
                          ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Index math shared by the pandas and Arrow grouped-eval paths.
+    """Index math of the grouped-eval path (``score_batches``).
 
     ``codes`` maps each of n input rows to its signature; ``out_sig`` maps
     each kernel output row to the signature it came from.  Returns
@@ -206,32 +183,3 @@ def grouped_scatter_plan(codes: np.ndarray, k: int, out_sig: np.ndarray
         np.concatenate([[0], np.cumsum(row_counts)[:-1]]), row_counts)
     take = starts[codes][rep_row] + within
     return order, take, rep_row
-
-
-def post_sidepath_stages_grouped(df: pd.DataFrame,
-                                 offset_distance=None) -> pd.DataFrame:
-    """_post_sidepath_stages evaluated once per distinct attribute tuple.
-
-    Output rows are the same multiset as the direct call (order may
-    differ within a batch — row order is not part of the contract); the
-    `id` column carries each input row's own id through its block.
-    """
-    n = len(df)
-    key_cols = [c for c in df.columns if c != "id"]
-    if n < _GROUP_MIN_ROWS or "id" not in df.columns:
-        return _post_sidepath_stages(df, offset_distance=offset_distance)
-    codes, first = _signature_codes(df, key_cols)
-    k = len(first)
-    if k * _GROUP_MIN_DUP >= n:
-        return _post_sidepath_stages(df, offset_distance=offset_distance)
-
-    rep = df.iloc[first].reset_index(drop=True)
-    rep["__sig"] = np.arange(k, dtype=np.int64)
-    out_rep = _post_sidepath_stages(rep, project=False,
-                                    offset_distance=offset_distance)
-    out_sig = out_rep["__sig"].to_numpy(dtype=np.int64)
-    order, take, rep_row = grouped_scatter_plan(codes, k, out_sig)
-    blocks = final_projection(out_rep.iloc[order].reset_index(drop=True))
-    final = blocks.take(take).reset_index(drop=True)
-    final["id"] = df["id"].to_numpy(dtype=object)[rep_row]
-    return final

@@ -29,9 +29,13 @@ def connected_components(edges: DataFrame, src: str = "src",
 
     Node ids must be orderable (bigint here).  Undirected semantics.
     """
+    # every round joins the edge set again: checkpointed once, so the
+    # rounds read it instead of re-running the edges' whole lineage (for
+    # dedup_components, the MinHash pair stage)
     sym = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
            .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-           .distinct())
+           .distinct()
+           .localCheckpoint(eager=True))
     labels = (sym.select(F.col("a").alias("node"))
               .distinct()
               .withColumn("component", F.col("node")))

@@ -3,7 +3,7 @@
 Plan shape (SURVEY.md §3.1 engine lifecycle):
 
     pages scan ──mapInPandas──> way table (tag cols + lonlat geometry;
-                                the GeoJSONL scan packs the tags no Spark
+                                every way source packs the tags no Spark
                                 operator reads into one __tags column)
         ├─ paths ──mapInPandas──> check points (way_id, cell, x, y)   [J1+J2]
         ├─ roads ──mapInPandas──> cell-exploded road index            [J3/J4 prep]
@@ -588,10 +588,9 @@ def score_batches(ways_with_sidepath: DataFrame,
             yield from to_out_table(out).to_batches()
             return
         tbl = tbl.combine_chunks()
-        # mixed-radix signature codes from C++ dictionary encodes
-        # (same recompress-before-overflow scheme as _signature_codes;
-        # Arrow distinctness is at least as fine as pandas factorize —
-        # rows sharing a signature are bit-identical tuples)
+        # mixed-radix signature codes from C++ dictionary encodes,
+        # recompressed before int64 overflow (rows sharing a signature
+        # are bit-identical tuples)
         sig = np.zeros(n, dtype=np.int64)
         card = 1
         for i, name in enumerate(names):
@@ -651,17 +650,10 @@ def score_batches(ways_with_sidepath: DataFrame,
     return ways_with_sidepath.mapInArrow(run, OUTPUT_SCHEMA)
 
 
-def score_pages(pages: DataFrame,
-                tag_columns: list[str] | None = None) -> DataFrame:
-    """pages -> scored way table (the engine's flagship query).
-
-    `tag_columns` narrows the carried tag set when the corpus's tag
-    universe is known (column pruning is the engine's scan contract, P1);
-    the kernel NULL-fills anything missing, so narrowing never changes
-    results — only memory traffic.
-    """
+def score_pages(pages: DataFrame) -> DataFrame:
+    """pages -> scored way table (the engine's flagship query)."""
     from ..sources.pages import extract_ways
-    ways = extract_ways(pages, tag_columns or WAY_TAG_COLUMNS)
+    ways = extract_ways(pages, WAY_TAG_COLUMNS)
     return score_way_table(ways)
 
 

@@ -689,34 +689,31 @@ _sql_pair("dedup_exact", ("documents",), _dedup_exact,
           "Exact dedup via content-key hash groupBy")
 
 
-def _minhash_bands(d: str) -> str:
+def _minhash_bands() -> str:
     """Per-doc LSH band rows: (doc_id, band_idx, band_key)."""
-    keys = D.band_keys(D.token_hashes("text", d), d)
+    keys = D.band_keys(D.token_hashes("text", DUCK), DUCK)
     selects = [
         f"select doc_id, {i} as band_idx, cast({k} as bigint) as band_key "
         f"from documents" for i, k in enumerate(keys)]
     return " union all ".join(selects)
 
 
-def _jaccard_expr(d: str, a: str, b: str) -> str:
-    ta = D.tokens_distinct(a, d)
-    tb = D.tokens_distinct(b, d)
-    if d == SPARK:
-        inter = f"size(array_intersect({ta}, {tb}))"
-        union = f"size(array_union({ta}, {tb}))"
-    else:
-        inter = f"len(list_intersect({ta}, {tb}))"
-        union = f"len(list_distinct(list_concat({ta}, {tb})))"
+def _jaccard_expr(a: str, b: str) -> str:
+    ta = D.tokens_distinct(a, DUCK)
+    tb = D.tokens_distinct(b, DUCK)
+    inter = f"len(list_intersect({ta}, {tb}))"
+    union = f"len(list_distinct(list_concat({ta}, {tb})))"
     return f"(cast({inter} as double) / {union})"
 
 
-def _dedup_minhash_lsh(d: str) -> str:
+def _dedup_minhash_lsh() -> str:
     # MinHash(16) + LSH(4 bands x 4 rows) candidate pairs over the FULL
     # corpus (no row cap), verified by exact Jaccard >= 0.9 on
-    # distinct-token sets. The Spark plan is the banded join (scale path).
-    jac = _jaccard_expr(d, "da.text", "db.text")
+    # distinct-token sets: the DuckDB oracle (the Spark plan is
+    # _dedup_minhash_fn).
+    jac = _jaccard_expr("da.text", "db.text")
     return f"""
-with bands as ({_minhash_bands(d)}),
+with bands as ({_minhash_bands()}),
 cand as (
   select distinct a.doc_id as doc_a, b.doc_id as doc_b
   from bands a join bands b
@@ -752,7 +749,7 @@ def _dedup_minhash_fn(spark, sf_dir: str):
 
 _reg(Query("dedup_minhash_lsh", ("documents",),
            fn=_dedup_minhash_fn,
-           duck_sql=_dedup_minhash_lsh(DUCK),
+           duck_sql=_dedup_minhash_lsh(),
            doc="MinHash+LSH banded near-dup join with exact-Jaccard verify "
                "(the incremental index's pair stage, persisted single-scan "
                "stages)"))
@@ -1627,7 +1624,7 @@ def _components_fn(spark, sf_dir: str):
 
 
 def _components_duck() -> str:
-    pairs = _dedup_minhash_lsh(DUCK)
+    pairs = _dedup_minhash_lsh()
     return f"""
 with recursive pairs as ({pairs.strip().rstrip(';')}),
 edges2 as (

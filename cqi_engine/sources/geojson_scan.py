@@ -40,15 +40,7 @@ def read_geojsonl(spark: SparkSession, path: str,
                   tag_columns: list[str]) -> DataFrame:
     """GeoJSONL -> way table (LineStrings only), distributed.
 
-    Properties land in a MapType.  The requested tags that Spark-side
-    operators read (``config.SPARK_TAG_COLUMNS``) become string columns;
-    every other requested tag with a non-null value goes into one
-    ``__tags`` column, a JSON object with its keys sorted (NULL when there
-    are none), which ``score_batches`` unpacks at the kernel's Arrow
-    boundary.  Sorted keys make equal tag tuples equal strings, so the
-    kernel's grouped path groups exactly as it would on columns, and every
-    relation up to the kernel stays about ten columns wide instead of one
-    per whitelisted tag.
+    Properties land in a MapType, laid out by :func:`way_layout`.
     """
     feats = spark.read.text(path).selectExpr(
         f"from_json(value, {Q(_FEATURE_SCHEMA.simpleString())}) AS f")
@@ -73,25 +65,41 @@ def read_geojsonl(spark: SparkSession, path: str,
         " AND forall(f.geometry.coordinates, p -> p IS NOT NULL"
         " AND size(p) >= 2 AND get(p, 0) IS NOT NULL"
         " AND get(p, 1) IS NOT NULL)")
-    # one selectExpr: a Column-API loop costs 45 Py4J round trips per tag
-    cols = [f"f.properties[{Q(c)}] AS {Q(c, ident=True)}"
+    return lines.selectExpr(*way_layout(
+        "f.properties", tag_columns,
+        "transform(f.geometry.coordinates, p -> slice(p, 1, 2))"))
+
+
+def way_layout(props: str, tag_columns: list[str], geom: str) -> list[str]:
+    """The way table's ``selectExpr`` list, shared by every way source.
+
+    ``props`` is a ``map<string,string>`` expression of a way's tags and
+    ``geom`` its geometry expression.  The requested tags that Spark-side
+    operators read (``config.SPARK_TAG_COLUMNS``) become string columns;
+    every other requested tag with a non-null value goes into one
+    ``__tags`` column, a JSON object with its keys sorted (NULL when there
+    are none), which ``score_batches`` unpacks at the kernel's Arrow
+    boundary.  Sorted keys make equal tag tuples equal strings, so the
+    kernel's grouped path groups exactly as it would on columns, and every
+    relation up to the kernel stays about ten columns wide instead of one
+    per whitelisted tag.  One ``selectExpr``: a Column-API loop costs 45
+    Py4J round trips per tag.
+    """
+    cols = [f"{props}[{Q(c)}] AS {Q(c, ident=True)}"
             for c in tag_columns if c in C.SPARK_TAG_COLUMNS]
     packed = [c for c in tag_columns if c not in C.SPARK_TAG_COLUMNS]
     if packed:
         keys = ", ".join(Q(c) for c in packed)
         cols.append(
             "nullif(to_json(map_from_entries(array_sort(map_entries("
-            f"map_filter(f.properties, (k, v) -> v IS NOT NULL"
+            f"map_filter({props}, (k, v) -> v IS NOT NULL"
             f" AND k IN ({keys})))))), {Q('{}')})"
             f" AS {Q(PACKED_TAGS, ident=True)}")
-    return lines.selectExpr(
-        *cols,
-        "transform(f.geometry.coordinates, p -> slice(p, 1, 2))"
-        " AS geom_lonlat")
+    return [*cols, f"{geom} AS geom_lonlat"]
 
 
 def unpack_tags(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Expand ``read_geojsonl``'s packed ``__tags`` JSON objects into one
+    """Expand ``way_layout``'s packed ``__tags`` JSON objects into one
     string column per key; the rule kernel NULL-fills the tags no row
     carries.  Each distinct string is decoded once.  A real column wins
     over a packed key of the same name (the writeback rewrites ``name``).

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .geojson_scan import way_layout
+
 PAGES_SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), False),
     T.StructField("warc_ts", T.TimestampType(), True),
@@ -130,16 +132,20 @@ def parse_way_text(text: str) -> dict | None:
 
 
 def extract_ways(pages: DataFrame, tag_columns: list[str]) -> DataFrame:
-    """pages -> way table: url, tag columns, geom_lonlat (S1 of SURVEY §2.1).
+    """pages -> way table (S1 of SURVEY §2.1): url, then the
+    ``geojson_scan.way_layout`` of the requested tags and geom_lonlat.
 
     Vectorized text extraction via mapInPandas; the parse itself is
     string-splitting over Arrow batches (no JVM round trips per row).
+    Each page yields its url, a map of its non-null tags as strings and
+    its geometry; the layout projection runs JVM-side.
     """
-    fields = [T.StructField("url", T.StringType())]
-    fields += [T.StructField(c, T.StringType()) for c in tag_columns]
-    fields.append(T.StructField(
-        "geom_lonlat", T.ArrayType(T.ArrayType(T.DoubleType()))))
-    out_schema = T.StructType(fields)
+    out_schema = T.StructType([
+        T.StructField("url", T.StringType()),
+        T.StructField("tags", T.MapType(T.StringType(), T.StringType())),
+        T.StructField("geom_lonlat",
+                      T.ArrayType(T.ArrayType(T.DoubleType()))),
+    ])
 
     def _extract(batches):
         for pdf in batches:
@@ -154,7 +160,7 @@ def extract_ways(pages: DataFrame, tag_columns: list[str]) -> DataFrame:
                 # sliced to XY (OGR keeps XY of 3D positions).
                 if rec is None:
                     continue
-                g = rec.get("geom_lonlat")
+                g = rec.pop("geom_lonlat", None)
                 if (not isinstance(g, list) or len(g) < 2
                         or any(not isinstance(p, (list, tuple))
                                or len(p) < 2
@@ -166,15 +172,12 @@ def extract_ways(pages: DataFrame, tag_columns: list[str]) -> DataFrame:
                     # null/str/nested-list ordinates, and float(None)
                     # outside this guard would kill the task for one row
                     continue
-                rec["geom_lonlat"] = [[float(p[0]), float(p[1])]
-                                      for p in g]
-                row = {"url": url}
-                for c in tag_columns:
-                    v = rec.get(c)
-                    row[c] = None if v is None else str(v)
-                row["geom_lonlat"] = rec.get("geom_lonlat")
-                recs.append(row)
-            yield pd.DataFrame(recs, columns=["url"] + tag_columns
-                               + ["geom_lonlat"])
+                recs.append((url,
+                             {k: str(v) for k, v in rec.items()
+                              if v is not None},
+                             [[float(p[0]), float(p[1])] for p in g]))
+            yield pd.DataFrame(recs, columns=["url", "tags", "geom_lonlat"])
 
-    return pages.select("url", "text").mapInPandas(_extract, out_schema)
+    return (pages.select("url", "text").mapInPandas(_extract, out_schema)
+            .selectExpr("url", *way_layout("tags", tag_columns,
+                                           "geom_lonlat")))

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import read_geojson_lines
+from .geojson_scan import way_layout
 from .pages import PAGES_SCHEMA, page_row
 
 FIXTURE_WAYS = "/root/reference/data/test_ways/test_ways.geojson"
@@ -92,23 +93,6 @@ def pages_from_documents(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id").mapInPandas(gen, PAGES_SCHEMA)
 
 
-@functools.lru_cache(maxsize=1)
-def active_tag_columns() -> tuple[str, ...]:
-    """Whitelisted tags that actually occur in this corpus.
-
-    The generic pipeline carries the full ~190-column retainfields
-    whitelist (ref:parameter.py:270-464); for the web-scale synthesis we
-    know the tag universe up front, and carrying the all-NULL remainder
-    through Arrow batches + cache roughly doubles memory traffic — the
-    binding constraint for multi-core scaling.  The scoring kernel
-    NULL-fills missing columns (schema alignment P3), so the result is
-    identical (pytest-pinned by the golden corpus run).
-    """
-    from .. import config as C
-    keys = {k for _wid, tags, _c in fixture_way_records() for k in tags}
-    return tuple(c for c in C.TAG_WHITELIST if c in keys)
-
-
 _WID_SENTINEL = "@@WID@@"
 
 
@@ -124,18 +108,18 @@ def _fixture_templates() -> list[tuple]:
     drift fails loudly, not silently).
 
     Returns per fixture: (base_id, tag_prefix, tag_suffix, base_lons,
-    lat_strs, const_cols, base_lats) where const_cols maps every non-``id``
-    output tag column to its (constant) parsed string value and base_lats
-    are the latitudes exactly as the envelope parser would return them
-    (``float(lat_str)`` — the same conversion ``json.loads`` applies to a
-    plain number token, so direct geometry assembly from (shifted lons,
-    base_lats) is bit-identical to rendering + re-parsing the text).
+    lat_strs, tags, base_lats) where tags maps every non-null tag except
+    ``id`` to its (constant) parsed value, stringified as ``extract_ways``
+    does, and base_lats are the latitudes exactly as the envelope parser
+    would return them (``float(lat_str)`` — the same conversion
+    ``json.loads`` applies to a plain number token, so direct geometry
+    assembly from (shifted lons, base_lats) is bit-identical to rendering
+    + re-parsing the text).
     """
     import json as _json
 
     from ..sources.pages import parse_way_text, way_to_text
 
-    tag_columns = list(active_tag_columns())
     out = []
     for base_id, tags, coords in fixture_way_records():
         tags_sent = dict(tags)
@@ -149,16 +133,16 @@ def _fixture_templates() -> list[tuple]:
         lat_strs = [repr(float(b)) for b in coords[:, 1]]
         proto = parse_way_text(way_to_text(
             base_id, dict(tags, id=base_id), coords.tolist()))
-        const_cols = {c: (None if proto.get(c) is None else str(proto[c]))
-                      for c in tag_columns if c != "id"}
+        const_tags = {k: str(v) for k, v in proto.items()
+                      if k not in ("id", "geom_lonlat") and v is not None}
         base_lats = np.array([float(ls) for ls in lat_strs], dtype=float)
         out.append((base_id, tag_prefix, tag_suffix, base_lons, lat_strs,
-                    const_cols, base_lats))
+                    const_tags, base_lats))
 
     # template-vs-serializer byte identity, checked on real ids
     from ..sources.pages import _ENVELOPE_HEAD, _ENVELOPE_TAIL, _filler
     for fi in (0, len(out) - 1):
-        base_id, tp, ts, lons, lat_strs, _cc, _bl = out[fi]
+        base_id, tp, ts, lons, lat_strs, _tags, _bl = out[fi]
         _bid, tags, coords = fixture_way_records()[fi]
         for clone in (0, 3):
             wid = base_id if clone == 0 else f"{base_id}__d{clone}"
@@ -193,28 +177,30 @@ def ways_from_documents(docs: DataFrame) -> DataFrame:
     unfused path.
 
     Row assembly is grouped by fixture: within a batch the ~140 fixtures
-    each contribute a run of rows whose tag values are constant except
-    ``id``, so constant columns are filled by group assignment instead of
-    one 85-key dict per row, and envelope text renders from the per-fixture
-    template (`_fixture_templates`, byte-identical to ``way_to_text``).
+    each contribute a run of rows whose tags are one constant map except
+    ``id``, and envelope text renders from the per-fixture template
+    (`_fixture_templates`, byte-identical to ``way_to_text``).  The rows
+    leave Python as (url, tag map, geometry) and take the way table's
+    layout in the same JVM-side projection as ``extract_ways``
+    (``geojson_scan.way_layout``).
     """
     from pyspark.sql import types as T
 
+    from .. import config as C
     from ..sources.pages import (_ENVELOPE_HEAD, _ENVELOPE_TAIL, _filler,
                                  parse_way_text)
 
     n_fix = len(fixture_way_records())
-    tag_columns = list(active_tag_columns())
-
-    fields = [T.StructField("url", T.StringType())]
-    fields += [T.StructField(c, T.StringType()) for c in tag_columns]
-    # FLAT interleaved lon,lat doubles: one Arrow values+offsets buffer
-    # pair per batch instead of one child array per point (the pipeline
-    # dual-accepts flat/nested, see operators.pipeline._flat_geom) —
-    # roughly halves the synthesis stage's Arrow output and the `ways`
-    # persist footprint
-    fields.append(T.StructField("geom_lonlat", T.ArrayType(T.DoubleType())))
-    out_schema = T.StructType(fields)
+    out_schema = T.StructType([
+        T.StructField("url", T.StringType()),
+        T.StructField("tags", T.MapType(T.StringType(), T.StringType())),
+        # FLAT interleaved lon,lat doubles: one Arrow values+offsets
+        # buffer pair per batch instead of one child array per point (the
+        # pipeline dual-accepts flat/nested, see
+        # operators.pipeline._flat_geom) — roughly halves the synthesis
+        # stage's Arrow output and the `ways` persist footprint
+        T.StructField("geom_lonlat", T.ArrayType(T.DoubleType())),
+    ])
 
     # materialized DRIVER-side and shipped in the task closure: the
     # templates derive from the reference fixture file, which exists on
@@ -231,17 +217,17 @@ def ways_from_documents(docs: DataFrame) -> DataFrame:
             clones = doc_ids // n_fix
             cols: dict[str, np.ndarray] = {
                 c: np.empty(n, dtype=object)
-                for c in ("url", *tag_columns, "geom_lonlat")}
+                for c in ("url", "tags", "geom_lonlat")}
             for f in np.unique(fi):
                 idx = np.nonzero(fi == f)[0]
-                base_id, tp, ts, base_lons, lat_strs, const_cols, \
+                base_id, tp, ts, base_lons, lat_strs, const_tags, \
                     base_lats = templates[int(f)]
-                for c, v in const_cols.items():
-                    cols[c][idx] = v
                 cl = clones[idx]
                 wids = [base_id if c == 0 else f"{base_id}__d{c}"
                         for c in cl.tolist()]
-                cols["id"][idx] = np.array(wids, dtype=object)
+                tags = np.empty(len(idx), dtype=object)
+                tags[:] = [dict(const_tags, id=w) for w in wids]
+                cols["tags"][idx] = tags
                 cols["url"][idx] = np.array(
                     [f"https://fixture.test/way/{w}" for w in wids],
                     dtype=object)
@@ -274,11 +260,11 @@ def ways_from_documents(docs: DataFrame) -> DataFrame:
                                            dtype=float).ravel(), g[j])):
                         raise ValueError(
                             f"byte-identity round trip failed for {wid}")
-            yield pd.DataFrame(cols,
-                               columns=["url"] + tag_columns
-                               + ["geom_lonlat"], copy=False)
+            yield pd.DataFrame(cols, copy=False)
 
-    return docs.select("doc_id").mapInPandas(gen, out_schema)
+    return (docs.select("doc_id").mapInPandas(gen, out_schema)
+            .selectExpr("url", *way_layout("tags", C.TAG_WHITELIST,
+                                           "geom_lonlat")))
 
 
 def score_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -381,6 +367,7 @@ def ways_pandas(sf_dir: str) -> pd.DataFrame:
     same byte-identity round trip) for the pandas reference path."""
     import duckdb
 
+    from .. import config as C
     from ..geometry import lonlat_to_metric
     from .pages import parse_way_text
 
@@ -389,7 +376,6 @@ def ways_pandas(sf_dir: str) -> pd.DataFrame:
     ).fetchall()]
     fixtures = fixture_way_records()
     n_fix = len(fixtures)
-    tag_columns = list(active_tag_columns())
     recs = []
     for doc_id in doc_ids:
         base_id, tags, coords = fixtures[int(doc_id) % n_fix]
@@ -404,7 +390,7 @@ def ways_pandas(sf_dir: str) -> pd.DataFrame:
         if rec is None or rec.get("id") != wid:
             raise ValueError(f"byte-identity round trip failed for {wid}")
         row = {c: (None if rec.get(c) is None else str(rec.get(c)))
-               for c in tag_columns}
+               for c in C.TAG_WHITELIST}
         row["geom_lonlat"] = np.asarray(rec["geom_lonlat"], dtype=float)
         recs.append(row)
     ways = pd.DataFrame(recs)

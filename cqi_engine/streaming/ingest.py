@@ -54,8 +54,7 @@ def crawl_stats_query(pages: DataFrame, checkpoint_dir: str,
             .format("memory"))
 
 
-def scoring_sink(pages: DataFrame, out_dir: str, checkpoint_dir: str,
-                 tag_columns: list[str] | None = None):
+def scoring_sink(pages: DataFrame, out_dir: str, checkpoint_dir: str):
     """foreachBatch incremental scoring: each micro-batch runs the batch
     pipeline and appends to a parquet sink keyed by batch id (idempotent
     restart: Structured Streaming replays a failed batch with the same id,
@@ -65,7 +64,7 @@ def scoring_sink(pages: DataFrame, out_dir: str, checkpoint_dir: str,
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        scored = score_pages(batch_df, tag_columns=tag_columns)
+        scored = score_pages(batch_df)
         (scored.withColumn("_batch_id", F.lit(batch_id))
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")

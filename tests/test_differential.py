@@ -8,29 +8,16 @@ digests must equal the one from ``kernel.pipeline.score_ways`` +
 ``final_projection`` on the same ways (the benchmark's own output check,
 ``perfbench/workloads.py``).  Unlike the golden tests this needs no
 external snapshot, so it guards the SQL text of the scan, writeback and
-sink projections in every run.
+sink projections in every run.  The documents path
+(``ways_from_documents`` -> ``score_way_table``) is checked the same way
+on a generated fixture corpus (``conftest.repo_way_corpus``).
 """
 
 from __future__ import annotations
 
-import os
-import sys
+import collections
 
 import pytest
-
-PERFBENCH = os.path.join(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__))), "perfbench")
-
-
-@pytest.fixture(scope="module")
-def perfbench():
-    sys.path.insert(0, PERFBENCH)
-    try:
-        import gen
-        import workloads
-    finally:
-        sys.path.remove(PERFBENCH)
-    return gen, workloads
 
 
 @pytest.mark.parametrize("kind", ["urban", "rural"])
@@ -91,3 +78,40 @@ def test_non_finite_and_huge_maxspeed(spark, tmp_path, perfbench):
         assert speed["w3_0"] == expect, speed
     assert sum(wl.digests(got).values()) == len(want)
     assert wl.digests(got) == wl.digests(want)
+
+
+def test_documents_path_matches_pandas_reference(spark, tmp_path,
+                                                 repo_way_corpus):
+    """``ways_from_documents`` -> ``score_way_table`` against the pandas
+    reference path (``flagship_full_expected``) on a repo-owned corpus
+    over three clone blocks.  The corpus carries no ``layer``,
+    ``footway`` or ``is_sidepath`` tag, so the way table's columns must
+    not depend on which tags a corpus uses."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cqi_engine.operators.pipeline import score_way_table
+    from cqi_engine.sources.webways import (digest_rows_pdf,
+                                            flagship_full_expected,
+                                            scored_pandas,
+                                            ways_from_documents)
+
+    n_fix = len(repo_way_corpus)
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(pa.table({"doc_id": pa.array(range(2 * n_fix + 17),
+                                                type=pa.int64())}),
+                   str(sf / "documents.parquet"))
+    docs = spark.read.parquet(str(sf / "documents.parquet"))
+    got = digest_rows_pdf(score_way_table(ways_from_documents(docs))
+                          .toPandas())
+    scored = scored_pandas(str(sf))
+    assert (scored["proc_sidepath"] == "yes").any()
+    assert scored["id"].str.endswith("__d2").any()
+    want = flagship_full_expected(str(sf), scored)
+
+    def multiset(d):
+        return collections.Counter(zip(d["id"], d["side"], d["row_sha"]))
+
+    assert len(got) == len(want)
+    assert multiset(got) == multiset(want)

@@ -1155,34 +1155,45 @@ def test_realistic_offsets_through_spark_pipeline(spark):
     assert got[("w1", None)] is None and got[("w2", None)] is None
 
 
-def test_fused_ways_match_unfused_extract_bitwise(spark):
+@pytest.mark.parametrize("corpus", ["reference", "repo"])
+def test_fused_ways_match_unfused_extract_bitwise(spark, request, corpus):
     """The fused doc_id -> way synthesis (direct geometry assembly from the
     per-fixture template) must equal the unfused pages -> extract_ways path
-    row-for-row, geometry bit-exact, across clone blocks (clone 0, 1, 2)."""
+    row-for-row, geometry bit-exact, across clone blocks (clone 0, 1, 2),
+    and both must hand score_way_table the scan's layout: url, the
+    Spark-side tag columns, ``__tags`` and geom_lonlat — whatever tags the
+    corpus uses (``repo``: a generated corpus without most of them)."""
+    from cqi_engine import config as C
+    from cqi_engine.operators.pipeline import WAY_TAG_COLUMNS
+    from cqi_engine.sources import webways
+    from cqi_engine.sources.geojson_scan import PACKED_TAGS
     from cqi_engine.sources.pages import extract_ways
-    from cqi_engine.sources.webways import (active_tag_columns,
-                                            fixture_way_records,
-                                            pages_from_documents,
-                                            ways_from_documents)
 
-    n_fix = len(fixture_way_records())
+    if corpus == "repo":
+        request.getfixturevalue("repo_way_corpus")
+    n_fix = len(webways.fixture_way_records())
     docs = spark.range(0, 2 * n_fix + 17).withColumnRenamed("id", "doc_id")
 
-    fused = {r["url"]: r for r in ways_from_documents(docs).collect()}
-    unfused = {r["url"]: r
-               for r in extract_ways(pages_from_documents(docs),
-                                     list(active_tag_columns())).collect()}
+    layout = (["url"] + [c for c in WAY_TAG_COLUMNS
+                         if c in C.SPARK_TAG_COLUMNS]
+              + [PACKED_TAGS, "geom_lonlat"])
+    fused_df = webways.ways_from_documents(docs)
+    unfused_df = extract_ways(webways.pages_from_documents(docs),
+                              WAY_TAG_COLUMNS)
+    assert fused_df.columns == unfused_df.columns == layout
+    fused = {r["url"]: r for r in fused_df.collect()}
+    unfused = {r["url"]: r for r in unfused_df.collect()}
     assert set(fused) == set(unfused) and len(fused) == 2 * n_fix + 17
 
-    tag_cols = list(active_tag_columns())
     for url, fr in fused.items():
         ur = unfused[url]
-        for c in tag_cols:
+        for c in layout[:-1]:
             assert fr[c] == ur[c], (url, c, fr[c], ur[c])
         flat_unfused = np.asarray(
             [v for pt in ur["geom_lonlat"] for v in pt], dtype=float)
         np.testing.assert_array_equal(
             np.asarray(fr["geom_lonlat"], dtype=float), flat_unfused)
+    assert any(r[PACKED_TAGS] for r in fused.values())
 
 
 def test_lsh_arrow_buckets_match_sql_template_on_degenerate_vectors(

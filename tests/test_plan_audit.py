@@ -410,20 +410,35 @@ def test_knn_probe_py4j_flat_in_ring(spark):
     assert counts[1] == counts[4], counts
 
 
-def test_kernel_input_is_narrow(spark, tmp_path):
+@pytest.mark.parametrize("source", ["geojsonl", "pages", "documents"])
+def test_kernel_input_is_narrow(spark, tmp_path, request, source):
     """With the whole tag whitelist requested, the relation feeding
-    score_batches' MapInArrow carries the scan's Spark-side tag columns,
-    the packed ``__tags`` column and the three proc_* writeback columns
-    (12), not one column per whitelisted tag (186): the width every
-    relation between the scan and the kernel shares."""
+    score_batches' MapInArrow carries the Spark-side tag columns, the
+    packed ``__tags`` column and the three proc_* writeback columns (12),
+    not one column per whitelisted tag (186): the width every relation
+    between a way source and the kernel shares.  Every way source — the
+    GeoJSONL scan, pages through ``score_pages`` and the documents path
+    (on a generated corpus) — lays its table out the same way."""
     import re
 
     from cqi_engine.operators.pipeline import (WAY_TAG_COLUMNS,
-                                               score_way_table)
+                                               score_pages, score_way_table)
     from cqi_engine.sources.geojson_scan import read_geojsonl
+    from cqi_engine.sources.pages import way_to_text
 
-    scored = score_way_table(
-        read_geojsonl(spark, _one_feature_file(tmp_path), WAY_TAG_COLUMNS))
+    if source == "geojsonl":
+        scored = score_way_table(read_geojsonl(
+            spark, _one_feature_file(tmp_path), WAY_TAG_COLUMNS))
+    elif source == "pages":
+        scored = score_pages(spark.createDataFrame(
+            [("u1", way_to_text("w1", {"id": "w1", "highway": "path"},
+                                [[13.4, 52.5], [13.41, 52.51]]))],
+            ["url", "text"]))
+    else:
+        request.getfixturevalue("repo_way_corpus")
+        from cqi_engine.sources.webways import ways_from_documents
+        scored = score_way_table(ways_from_documents(
+            spark.range(0, 40).withColumnRenamed("id", "doc_id")))
     widths = [int(n) for n in re.findall(
         r"\) MapInArrow\s*\nInput \[(\d+)\]", plan_text(scored))]
     assert len(widths) == 1, widths
