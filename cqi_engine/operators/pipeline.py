@@ -16,7 +16,8 @@ Plan shape (SURVEY.md §3.1 engine lifecycle):
     (row-local kernel; zero further shuffles)
 
 Skew posture: the cell join runs under AQE skew-join; dense-city cells can
-additionally be salted via `salt_hot_cells` (explicit histogram-driven
+additionally be salted via ``dwithin_pairs(salt_threshold=...)``, which
+hands the join to ``skew.salted_join`` (explicit histogram-driven
 mechanism, see operators/skew.py).
 
 All heavy per-row logic reuses the pandas kernels from cqi_engine.kernel —
@@ -540,7 +541,8 @@ def score_batches(ways_with_sidepath: DataFrame,
     web corpus no per-row Python object is created at all, which is both
     the single-core win and the memory-bandwidth win (object churn was the
     stage's multicore bottleneck).  Row-identical to the pandas path
-    (tests/test_grouped_eval.py); low-duplication batches fall back to the
+    (tests/test_properties.py::test_packed_tags_round_trip,
+    tests/test_differential.py); low-duplication batches fall back to the
     direct kernel.  A packed ``__tags`` column is one signature column
     like any other, and is unpacked (``unpack_tags``) only on the rows
     that reach the kernel: the representatives, or the whole batch on the

@@ -8,8 +8,9 @@ envelope; extraction parses the envelope back into the way table.  The
 ``text`` bytes round-trip byte-identically per url (BASELINE per-row
 invariant), verified by tests/test_spark_pipeline.py::test_text_byte_identity.
 
-At benchmark scale the fixture ways are replicated with deterministic
-coordinate offsets and fresh ids — same shape, arbitrary row count.
+The envelope format lives here only; the documents path
+(``webways.py``) maps doc ids to clones of way records and calls
+``page_row`` or, for the way table, skips the text altogether.
 """
 
 from __future__ import annotations
@@ -64,11 +65,15 @@ def way_to_text(way_id: str, tags: dict, coords: list[list[float]]) -> str:
             f"geom: {coord_json}\n{_ENVELOPE_TAIL}\n{_filler(way_id)}\n")
 
 
+def page_url(way_id: str) -> str:
+    return f"https://fixture.test/way/{way_id}"
+
+
 def page_row(way_id: str, tags: dict, coords: list[list[float]]) -> dict:
     text = way_to_text(way_id, tags, coords)
     seed = _h("page:" + way_id)
     return {
-        "url": f"https://fixture.test/way/{way_id}",
+        "url": page_url(way_id),
         "warc_ts": _EPOCH + dt.timedelta(seconds=seed % (365 * 24 * 3600)),
         "html": (b"<!doctype html><html><body><pre>" + text.encode("utf-8")
                  + b"</pre></body></html>"),
@@ -77,31 +82,30 @@ def page_row(way_id: str, tags: dict, coords: list[list[float]]) -> dict:
     }
 
 
-def synthesize_pages_pdf(ways: pd.DataFrame, replicate: int = 1,
-                         coords_col: str = "geom_lonlat") -> pd.DataFrame:
-    """One page per way, times `replicate` (deterministic clones shifted in
-    longitude so clone clusters never interact spatially)."""
-    rows = []
-    tag_cols = [c for c in ways.columns
-                if c not in (coords_col, "geom_metric")]
-    for r in range(replicate):
-        # 0.2 deg ≈ 14 km shift per clone batch keeps clusters disjoint
-        dx = 0.2 * r
-        suffix = "" if r == 0 else f"__r{r}"
-        for _, row in ways.iterrows():
-            tags = {c: row[c] for c in tag_cols if row[c] is not None}
-            wid = str(tags.get("id", "way")) + suffix
-            tags["id"] = wid
-            coords = np.asarray(row[coords_col], dtype=float).copy()
-            coords[:, 0] += dx
-            rows.append(page_row(wid, tags, coords.tolist()))
-    return pd.DataFrame(rows)
+def way_records(ways: pd.DataFrame) -> list[tuple[str, dict, np.ndarray]]:
+    """(way_id, tags, lonlat coords) per row of a way frame: the non-null
+    tags, with ``id`` set to the string way id."""
+    out = []
+    for _, row in ways.iterrows():
+        tags = {c: row[c] for c in ways.columns
+                if c not in ("geom_lonlat", "geom_metric")
+                and row[c] is not None}
+        wid = str(tags.get("id", "way"))
+        tags["id"] = wid
+        out.append((wid, tags,
+                    np.asarray(row["geom_lonlat"], dtype=float)))
+    return out
 
 
-def pages_dataframe(spark: SparkSession, ways: pd.DataFrame,
-                    replicate: int = 1) -> DataFrame:
-    pdf = synthesize_pages_pdf(ways, replicate)
-    return spark.createDataFrame(pdf, schema=PAGES_SCHEMA)
+def synthesize_pages_pdf(ways: pd.DataFrame) -> pd.DataFrame:
+    """One page per way."""
+    return pd.DataFrame([page_row(wid, tags, coords.tolist())
+                         for wid, tags, coords in way_records(ways)])
+
+
+def pages_dataframe(spark: SparkSession, ways: pd.DataFrame) -> DataFrame:
+    return spark.createDataFrame(synthesize_pages_pdf(ways),
+                                 schema=PAGES_SCHEMA)
 
 
 def parse_way_text(text: str) -> dict | None:

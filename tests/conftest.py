@@ -44,7 +44,5 @@ def repo_way_corpus(monkeypatch, perfbench):
     gen, _wl = perfbench
     records = [(wid, {**tags, "id": wid}, np.asarray(coords, dtype=float))
                for wid, tags, coords in gen.way_corpus(5, "pool", 12)]
-    webways._fixture_templates.cache_clear()
     monkeypatch.setattr(webways, "fixture_way_records", lambda: records)
     yield records
-    webways._fixture_templates.cache_clear()

@@ -1157,8 +1157,8 @@ def test_realistic_offsets_through_spark_pipeline(spark):
 
 @pytest.mark.parametrize("corpus", ["reference", "repo"])
 def test_fused_ways_match_unfused_extract_bitwise(spark, request, corpus):
-    """The fused doc_id -> way synthesis (direct geometry assembly from the
-    per-fixture template) must equal the unfused pages -> extract_ways path
+    """The direct doc_id -> way synthesis (rows built from the fixture
+    records, no page text) must equal the pages -> extract_ways path
     row-for-row, geometry bit-exact, across clone blocks (clone 0, 1, 2),
     and both must hand score_way_table the scan's layout: url, the
     Spark-side tag columns, ``__tags`` and geom_lonlat — whatever tags the
@@ -1194,6 +1194,36 @@ def test_fused_ways_match_unfused_extract_bitwise(spark, request, corpus):
         np.testing.assert_array_equal(
             np.asarray(fr["geom_lonlat"], dtype=float), flat_unfused)
     assert any(r[PACKED_TAGS] for r in fused.values())
+
+
+def test_documents_pages_text_byte_identity(spark, repo_way_corpus):
+    """BASELINE per-row invariant on the documents path, repo-owned: every
+    page ``pages_from_documents`` makes carries the text the driver-side
+    ``page_row`` renders for that doc's record (record ``doc % n``, clone
+    block ``doc // n``: id suffixed ``__d{block}``, longitudes shifted
+    0.2 deg per block), byte for byte, inside its html, and that text
+    parses back to the record's id.  Clone blocks 0, 1 and 2."""
+    from cqi_engine.sources.pages import page_row, parse_way_text
+    from cqi_engine.sources.webways import pages_from_documents
+
+    n_fix = len(repo_way_corpus)
+    n_docs = 2 * n_fix + 17
+    docs = spark.range(0, n_docs).withColumnRenamed("id", "doc_id")
+    got = {r["url"]: r for r in pages_from_documents(docs).collect()}
+    assert len(got) == n_docs
+
+    for doc in range(n_docs):
+        base_id, tags, coords = repo_way_corpus[doc % n_fix]
+        clone = doc // n_fix
+        wid = base_id if clone == 0 else f"{base_id}__d{clone}"
+        shifted = coords.copy()
+        shifted[:, 0] += 0.2 * clone
+        want = page_row(wid, dict(tags, id=wid), shifted.tolist())
+        r = got[want["url"]]
+        text = r["text"].encode("utf-8")
+        assert text == want["text"].encode("utf-8"), wid
+        assert text in bytes(r["html"]), wid
+        assert parse_way_text(r["text"])["id"] == wid
 
 
 def test_lsh_arrow_buckets_match_sql_template_on_degenerate_vectors(

@@ -22,11 +22,17 @@ def plan_text(df) -> str:
     return buf.getvalue()
 
 
-def test_flagship_plan_properties(spark):
+@pytest.mark.parametrize("corpus", ["sf0.001", "repo"])
+def test_flagship_plan_properties(spark, request, corpus):
     from cqi_engine.sources.webways import ways_from_documents
     from cqi_engine.operators.pipeline import score_way_table
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    if corpus == "repo":
+        request.getfixturevalue("repo_way_corpus")
+        docs = spark.range(0, 40).withColumnRenamed("id", "doc_id")
+    else:
+        docs = spark.read.parquet(
+            "/root/testdata/sf0.001/documents.parquet")
     scored = score_way_table(ways_from_documents(docs))
     plan = plan_text(scored)
 
@@ -40,6 +46,27 @@ def test_flagship_plan_properties(spark):
     # full 85-string-column way relation (spill-heavy at scale) purely to
     # satisfy SMJ ordering — the whole join tree must stay sort-free
     assert "SortMergeJoin" not in plan
+
+
+def test_documents_path_is_one_python_stage(spark, repo_way_corpus):
+    """``ways_from_documents`` builds its rows in one ``MapInPandas``
+    stage; composing ``pages_from_documents`` with ``extract_ways`` takes
+    two and carries every page's html and text between them."""
+    import re
+
+    from cqi_engine.operators.pipeline import WAY_TAG_COLUMNS
+    from cqi_engine.sources.pages import extract_ways
+    from cqi_engine.sources.webways import (pages_from_documents,
+                                            ways_from_documents)
+
+    def python_nodes(df):
+        return re.findall(r"^\(\d+\) (MapInPandas|MapInArrow)\b",
+                          plan_text(df), flags=re.M)
+
+    docs = spark.range(0, 40).withColumnRenamed("id", "doc_id")
+    assert python_nodes(ways_from_documents(docs)) == ["MapInPandas"]
+    assert python_nodes(extract_ways(pages_from_documents(docs),
+                                     WAY_TAG_COLUMNS)) == ["MapInPandas"] * 2
 
 
 def test_catalog_scan_pushdown(spark):
